@@ -97,6 +97,12 @@ def validate_design_semantics(design: TableDesign) -> None:
             raise TableDesignSemanticError(
                 f"{design.name}: EXTERNAL relation requires attributes.location"
             )
+        # files the engine did not write were never bucketed by it, so a
+        # bucket spec on them would promise a layout they do not have
+        if design.attributes.get("bucket_by"):
+            raise TableDesignSemanticError(
+                f"{design.name}: EXTERNAL relation may not declare bucket_by"
+            )
 
     if design.kind in ("CTAS", "VIEW"):
         es = design.extract_settings

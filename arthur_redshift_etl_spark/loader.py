@@ -29,6 +29,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Dict, Iterable, List, Optional, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,8 +66,6 @@ class LoadContext:
     store: EventStore = field(default_factory=EventStore)
     etl_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
     max_concurrency: int = 4
-    skip_copy: bool = False  # structural smoke mode (--skip-copy)
-    analyze: bool = True  # ANALYZE TABLE after load (reference load.py:554-561)
     # post-publish threshold-gated compaction (reference vacuum-after-update,
     # load.py:1360-1367).  OPT-IN like the reference's run_vacuum flag: the
     # probe is metadata-only but still costs a DESCRIBE + storage listing per
@@ -106,18 +105,42 @@ def rewrite_query_for_staging(query: str, identifiers: Iterable[str]) -> str:
     return out
 
 
+def _drop_relation(ctx: LoadContext, db: str, table: str) -> None:
+    """Drop whatever holds the name.  Spark refuses DROP TABLE on a view
+    (and DROP VIEW on a table), so a view is dropped on that refusal."""
+    full = f"{_quote(db)}.{_quote(table)}"
+    try:
+        ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
+    except AnalysisException:
+        ctx.spark.sql(f"DROP VIEW {full}")
+
+
 def _register_external_table(
     ctx: LoadContext, db: str, table: str, location: str
 ) -> None:
-    full = f"{_quote(db)}.{_quote(table)}"
-    ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-    ctx.spark.sql(f"CREATE TABLE {full} USING parquet LOCATION '{location}'")
+    """Register parquet files at ``location`` as-is (schema and partitions
+    inferred): for files no design describes — backups, attached schemas."""
+    _drop_relation(ctx, db, table)
+    ctx.spark.sql(
+        f"CREATE TABLE {_quote(db)}.{_quote(table)} USING parquet LOCATION '{location}'"
+    )
 
 
-def _drop_relation(ctx: LoadContext, db: str, table: str) -> None:
-    full = f"{_quote(db)}.{_quote(table)}"
-    ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-    ctx.spark.sql(f"DROP VIEW IF EXISTS {full}")
+def _create_view(ctx: LoadContext, db: str, table: str, sql: str) -> None:
+    _drop_relation(ctx, db, table)
+    ctx.spark.sql(f"CREATE VIEW {_quote(db)}.{_quote(table)} AS {sql}")
+
+
+def _location(spark: SparkSession, fq: str) -> Optional[str]:
+    """Storage location a table is registered at, without the ``file:``
+    scheme (a local path registers the same and walks with ``os``); None
+    when ``fq`` has no location (a view)."""
+    rows = (
+        spark.sql(f"DESCRIBE FORMATTED {fq}")
+        .filter("col_name = 'Location'")
+        .collect()
+    )
+    return rows[0]["data_type"].removeprefix("file:") if rows else None
 
 
 def _bucket_spec(design: TableDesign):
@@ -128,40 +151,15 @@ def _bucket_spec(design: TableDesign):
     return list(spec["columns"]), int(spec["buckets"])
 
 
+def _declares_layout(design: TableDesign) -> bool:
+    """Bucketed or partitioned: registration declares the design's columns
+    and the file layout carries meaning (compaction leaves it alone)."""
+    return bool(_bucket_spec(design) or design.attributes.get("partition_by"))
+
+
 def _columns_ddl(design: TableDesign) -> str:
     return ", ".join(
         f"{c.name} {c.spark_type().simpleString()}" for c in design.unskipped_columns
-    )
-
-
-def _register_partitioned_table(
-    ctx: LoadContext, db: str, rel: Relation, location: str
-) -> None:
-    """Register a hive-style partitioned external table and recover its
-    partitions — downstream filters on the partition column prune at the
-    directory level (PartitionFilters in the scan)."""
-    part_cols = list(rel.design.attributes.get("partition_by") or [])
-    full = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-    ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-    ctx.spark.sql(
-        f"CREATE TABLE {full} ({_columns_ddl(rel.design)}) USING parquet "
-        f"PARTITIONED BY ({', '.join(part_cols)}) LOCATION '{location}'"
-    )
-    ctx.spark.sql(f"ALTER TABLE {full} RECOVER PARTITIONS")
-
-
-def _register_bucketed_table(
-    ctx: LoadContext, db: str, rel: Relation, location: str
-) -> None:
-    """Re-register a bucketed table at a location, preserving the bucket spec
-    (CLUSTERED BY ... INTO N BUCKETS) so co-located joins stay shuffle-free."""
-    cols, buckets = _bucket_spec(rel.design)
-    full = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-    ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-    ctx.spark.sql(
-        f"CREATE TABLE {full} ({_columns_ddl(rel.design)}) USING parquet "
-        f"CLUSTERED BY ({', '.join(cols)}) SORTED BY ({', '.join(cols)}) "
-        f"INTO {buckets} BUCKETS LOCATION '{location}'"
     )
 
 
@@ -193,12 +191,20 @@ def _bloom_options(design) -> dict:
     return opts
 
 
-def _analyze_relation(ctx: "LoadContext", schema: str, table: str, design) -> None:
-    """Feed the CBO after a (re)registration.
+def _register(ctx: LoadContext, db: str, rel: Relation, location: str) -> None:
+    """Register ``rel`` at ``location`` by its declared layout, replacing
+    whatever held the name, then feed the CBO.
 
-    Table-level ``COMPUTE STATISTICS`` (size + row count) is a
-    metadata-only scan and always runs: it's what broadcast decisions and
-    AQE thresholds consume.  ``attributes.stats_columns: [col, ...]``
+    - bucketed: CLUSTERED BY ... INTO N BUCKETS, so co-located joins stay
+      shuffle-free;
+    - partitioned: hive-style PARTITIONED BY + RECOVER PARTITIONS, so
+      filters on the partition columns prune at the directory level;
+    - plain: schema inferred from the files.
+
+    Table-level ``COMPUTE STATISTICS`` (size + row count) always runs:
+    it's what broadcast decisions and AQE thresholds consume, and a
+    re-registration discards the previous name's stats (reference
+    load.py:554-561).  ``attributes.stats_columns: [col, ...]``
     additionally computes per-column ndv/min/max/null-count — the inputs
     join REORDERING actually needs (``spark.sql.cbo.joinReorder`` can't
     estimate join selectivity from row counts alone, so without column
@@ -208,13 +214,32 @@ def _analyze_relation(ctx: "LoadContext", schema: str, table: str, design) -> No
     is a full-table read per refresh for stats mostly nothing consumes.
     Measured effect: scripts/cbo_reorder_ab.py (SCALE.md round 9).
     """
-    if not ctx.analyze:
-        return
-    full = f"{_quote(schema)}.{_quote(table)}"
+    design = rel.design
+    full = f"{_quote(db)}.{_quote(rel.table_name.table)}"
+    bucket = _bucket_spec(design)
+    part_cols = list(design.attributes.get("partition_by") or [])
+    if bucket:
+        cols, buckets = bucket
+        layout = (
+            f"({_columns_ddl(design)}) USING parquet "
+            f"CLUSTERED BY ({', '.join(cols)}) SORTED BY ({', '.join(cols)}) "
+            f"INTO {buckets} BUCKETS"
+        )
+    elif part_cols:
+        layout = (
+            f"({_columns_ddl(design)}) USING parquet "
+            f"PARTITIONED BY ({', '.join(part_cols)})"
+        )
+    else:
+        layout = "USING parquet"
+    _drop_relation(ctx, db, rel.table_name.table)
+    ctx.spark.sql(f"CREATE TABLE {full} {layout} LOCATION '{location}'")
+    if part_cols:
+        ctx.spark.sql(f"ALTER TABLE {full} RECOVER PARTITIONS")
     ctx.spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS")
-    cols = design.attributes.get("stats_columns") or []
-    if cols:
-        col_list = ", ".join(_quote(c) for c in cols)
+    stats_cols = design.attributes.get("stats_columns") or []
+    if stats_cols:
+        col_list = ", ".join(_quote(c) for c in stats_cols)
         ctx.spark.sql(
             f"ANALYZE TABLE {full} COMPUTE STATISTICS FOR COLUMNS {col_list}"
         )
@@ -229,10 +254,14 @@ def materialize_dataframe(ctx: LoadContext, rel: Relation, df: DataFrame, db: st
     sort_keys = rel.design.attributes.get("compound_sort") or []
     dist = rel.design.attributes.get("distribution")
     bucket = _bucket_spec(rel.design)
+    writer_df = df
+    part_cols = list(rel.design.attributes.get("partition_by") or [])
     if bucket:
         # bucketed DISTKEY analog: hash-bucketed files + bucket metadata in
         # the catalog ⇒ joins/aggregations on the bucket columns skip their
         # shuffle entirely (verified: 0 Exchanges in the joined plan).
+        # Spark writes buckets only through saveAsTable; the registration
+        # it makes is replaced by _register's identical one below.
         cols, buckets = bucket
         _drop_relation(ctx, db, rel.table_name.table)
         (
@@ -244,11 +273,7 @@ def materialize_dataframe(ctx: LoadContext, rel: Relation, df: DataFrame, db: st
             .sortBy(*cols)
             .saveAsTable(f"{_quote(db)}.{_quote(rel.table_name.table)}")
         )
-        _analyze_relation(ctx, db, rel.table_name.table, rel.design)
-        return ctx.spark.table(f"{_quote(db)}.{_quote(rel.table_name.table)}").count()
-    writer_df = df
-    part_cols = list(rel.design.attributes.get("partition_by") or [])
-    if part_cols:
+    elif part_cols:
         # A partitioned write without co-location opens a file per
         # (task, partition-value) pair — tasks x partitions files (measured:
         # 2,656 vs 83 on the sf1.0 lineitem-by-month write, 2.4x the wall;
@@ -304,23 +329,18 @@ def materialize_dataframe(ctx: LoadContext, rel: Relation, df: DataFrame, db: st
             writer_df = writer_df.hint("rebalance")
         if sort_keys:
             writer_df = writer_df.sortWithinPartitions(*sort_keys)
-    writer = writer_df.write.mode("overwrite").options(**_bloom_options(rel.design))
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(location)
-    _drop_relation(ctx, db, rel.table_name.table)
-    if part_cols:
-        _register_partitioned_table(ctx, db, rel, location)
-    else:
-        _register_external_table(ctx, db, rel.table_name.table, location)
-    # stats feed Catalyst's CBO (broadcast decisions, join reordering)
-    _analyze_relation(ctx, db, rel.table_name.table, rel.design)
+    if not bucket:
+        writer = writer_df.write.mode("overwrite").options(**_bloom_options(rel.design))
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(location)
+    _register(ctx, db, rel, location)
     return ctx.spark.read.parquet(location).count()
 
 
 def build_source_relation(ctx: LoadContext, rel: Relation, db: str) -> int:
     """TABLE path: read extracted/static files, apply design schema, load."""
-    if ctx.skip_copy or rel.skip_copy:
+    if rel.skip_copy:
         df = ctx.spark.createDataFrame([], rel.design.to_spark_schema())
         return materialize_dataframe(ctx, rel, df, db)
     if not rel.data_location:
@@ -374,12 +394,7 @@ def build_external_relation(ctx: LoadContext, rel: Relation, db: str) -> int:
                 "external data is registered in place, so a type mismatch "
                 "is an error, not a cast"
             )
-    _drop_relation(ctx, db, rel.table_name.table)
-    if rel.design.attributes.get("partition_by"):
-        _register_partitioned_table(ctx, db, rel, location)
-    else:
-        _register_external_table(ctx, db, rel.table_name.table, location)
-    _analyze_relation(ctx, db, rel.table_name.table, rel.design)
+    _register(ctx, db, rel, location)
     return ctx.spark.table(f"{_quote(db)}.{_quote(rel.table_name.table)}").count()
 
 
@@ -439,13 +454,10 @@ def build_transformation(
     query = rewrite_redshift_sql(rel.sql())
     staged_query = rewrite_query_for_staging(query, staging_identifiers)
     if rel.is_view_relation:
-        full = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-        ctx.spark.sql(f"DROP VIEW IF EXISTS {full}")
-        ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-        ctx.spark.sql(f"CREATE VIEW {full} AS {staged_query}")
-        return ctx.spark.table(full).count()
+        _create_view(ctx, db, rel.table_name.table, staged_query)
+        return ctx.spark.table(f"{_quote(db)}.{_quote(rel.table_name.table)}").count()
     df = ctx.spark.sql(staged_query)
-    if rel.skip_copy or ctx.skip_copy:
+    if rel.skip_copy:
         df = df.limit(0)
     if rel.design.identity_column is not None:
         df = build_dimension(
@@ -483,10 +495,8 @@ def build_one_relation(
         # constraints are enforced on data the engine MOVED; external
         # relations are queried in place (the reference's Spectrum schemas
         # likewise cannot be constraint-enforced at load time)
-        if (
-            not (rel.skip_copy or ctx.skip_copy)
-            and not rel.is_view_relation
-            and not rel.is_external_relation
+        if not (
+            rel.skip_copy or rel.is_view_relation or rel.is_external_relation
         ):
             check_all_constraints(
                 ctx.spark.table(f"{_quote(db)}.{_quote(rel.table_name.table)}"),
@@ -510,53 +520,42 @@ def _build_all(
     ]
     transforms = [r for r in relations if r.is_transformation]
 
-    def build_empty_fallback(rel: Relation) -> None:
-        """The reference creates DDL before filling, so a failed fill leaves
-        an empty table dependents can still resolve (load.py:202-219)."""
-        if rel.is_view_relation:
-            return
-        db = as_staging(rel.table_name.schema) if use_staging else rel.table_name.schema
+    def build(rel: Relation) -> bool:
+        """Heap check + build.  A failure is logged and recorded, and leaves
+        an empty table dependents can still resolve: the reference creates
+        DDL before filling (load.py:202-219).  Returns False on failure."""
         try:
-            df = ctx.spark.createDataFrame([], rel.design.to_spark_schema())
-            materialize_dataframe(ctx, rel, df, db)
-        except Exception:
-            logger.warning("could not create empty fallback for %s", rel.identifier)
-
-    def load_source(rel: Relation) -> None:
-        try:
-            # same broadcast-debris exposure as the sequential loop below,
-            # shared driver heap; single-flight so the pool's threads never
-            # stack stop-the-world GCs for the same debris
-            ensure_heap_headroom(ctx.spark, single_flight=True)
+            # long rebuilds accumulate broadcast/shuffle blocks that only a
+            # driver GC lets the ContextCleaner release; on a tight heap the
+            # debris kills later broadcast builds (measured: plans/heap.py).
+            # The pool's threads share that heap: the check is single-flight.
+            ensure_heap_headroom(ctx.spark)
             build_one_relation(ctx, rel, use_staging, staging_ids)
+            return True
         except Exception as exc:
-            logger.error("source %s failed: %s", rel.identifier, exc)
+            logger.error("%s failed: %s", rel.identifier, exc)
             rel.failure_exc = exc  # type: ignore[attr-defined]
             failed.append(rel)
-            build_empty_fallback(rel)
+        if not rel.is_view_relation:
+            db = as_staging(rel.table_name.schema) if use_staging else rel.table_name.schema
+            try:
+                df = ctx.spark.createDataFrame([], rel.design.to_spark_schema())
+                materialize_dataframe(ctx, rel, df, db)
+            except Exception:
+                logger.warning("could not create empty fallback for %s", rel.identifier)
+        return False
 
     if sources:
         with ThreadPoolExecutor(max_workers=ctx.max_concurrency) as pool:
-            list(pool.map(load_source, sources))
+            list(pool.map(build, sources))
     for rel in failed:
         mark_failure(relations, rel)
 
     for rel in transforms:
-        if rel.failed:
-            continue
-        try:
-            # long rebuilds accumulate broadcast/shuffle blocks that only a
-            # driver GC lets the ContextCleaner release; on a tight heap the
-            # debris kills later broadcast builds (measured: plans/heap.py)
-            ensure_heap_headroom(ctx.spark)
-            build_one_relation(ctx, rel, use_staging, staging_ids)
-        except Exception as exc:
-            logger.error("transformation %s failed: %s", rel.identifier, exc)
-            rel.failure_exc = exc  # type: ignore[attr-defined]
-            failed.append(rel)
+        # a failure marks its dependents skip_copy at once: they still get
+        # built (empty)
+        if not rel.failed and not build(rel):
             mark_failure(relations, rel)
-            # dependents were marked skip_copy; they still get built (empty)
-            build_empty_fallback(rel)
     return failed
 
 
@@ -575,15 +574,9 @@ def publish(ctx: LoadContext, relations: Sequence[Relation]) -> None:
         prod = f"{_quote(tn.schema)}.{_quote(tn.table)}"
         if ctx.spark.catalog.tableExists(prod):
             try:
-                loc = (
-                    ctx.spark.sql(f"DESCRIBE FORMATTED {prod}")
-                    .filter("col_name = 'Location'")
-                    .collect()
-                )
+                loc = _location(ctx.spark, prod)
                 if loc:
-                    _register_external_table(
-                        ctx, as_backup(tn.schema), tn.table, loc[0]["data_type"]
-                    )
+                    _register_external_table(ctx, as_backup(tn.schema), tn.table, loc)
             except Exception:  # views or tables without location
                 pass
     # re-point production at staging; views are recreated last so their
@@ -597,30 +590,11 @@ def publish(ctx: LoadContext, relations: Sequence[Relation]) -> None:
         if not ctx.spark.catalog.tableExists(staged):
             logger.warning("%s missing from staging (failed build); keeping previous", rel.identifier)
             continue
-        loc = (
-            ctx.spark.sql(f"DESCRIBE FORMATTED {staged}")
-            .filter("col_name = 'Location'")
-            .collect()
-        )
-        location = loc[0]["data_type"]
-        _drop_relation(ctx, tn.schema, tn.table)
-        if _bucket_spec(rel.design):
-            _register_bucketed_table(ctx, tn.schema, rel, location)
-        elif rel.design.attributes.get("partition_by"):
-            _register_partitioned_table(ctx, tn.schema, rel, location)
-        else:
-            _register_external_table(ctx, tn.schema, tn.table, location)
-        # re-registration discards staging stats; recompute on the
-        # production name so the CBO sees sizes
-        _analyze_relation(ctx, tn.schema, tn.table, rel.design)
+        _register(ctx, tn.schema, rel, _location(ctx.spark, staged))
     for rel in views:
         tn = rel.table_name
-        full = f"{_quote(tn.schema)}.{_quote(tn.table)}"
-        ctx.spark.sql(f"DROP VIEW IF EXISTS {full}")
-        ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
         try:
-            query = rewrite_redshift_sql(rel.sql())
-            ctx.spark.sql(f"CREATE VIEW {full} AS {query}")
+            _create_view(ctx, tn.schema, tn.table, rewrite_redshift_sql(rel.sql()))
         except Exception as exc:
             logger.warning("view %s not published: %s", rel.identifier, exc)
     # drop staging
@@ -791,8 +765,8 @@ def refresh_partitions(
 
     Re-runs the relation's transformation restricted by ``predicate`` (a
     SQL filter, normally over the partition columns) and dynamically
-    overwrites ONLY the partitions the recomputed slice lands in
-    (``spark.sql.sources.partitionOverwriteMode=dynamic``).  At 100 TB
+    overwrites ONLY the partitions the recomputed slice lands in (a
+    ``partitionOverwriteMode=dynamic`` write).  At 100 TB
     this is THE incremental pattern: a single partition directory is
     re-materialized while every other file is untouched; the reference's
     ``update`` (load.py:1308-1367) delete-then-reloads the whole table.
@@ -835,20 +809,26 @@ def refresh_partitions(
             "of every touched partition"
         )
     check_all_constraints(slice_df, rel.design)
-    # partition columns must come LAST for insertInto's positional contract
-    data_cols = [c for c in slice_df.columns if c not in part_cols]
-    ordered = slice_df.select(*data_cols, *part_cols)
     touched = [
         tuple(str(r[c]) for c in part_cols)
         for r in slice_df.select(*part_cols).distinct().collect()
     ]  # bounded: one row per refreshed partition
+    # Dynamic overwrite as a per-write option, never the shared session
+    # conf: insertInto ignores the option (and would wipe the untouched
+    # partitions), so the slice is written to the table's location — cast
+    # to the registered schema as insertInto would — and the catalog then
+    # picks up any new partition directories.
     spark = ctx.spark
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        ordered.write.mode("overwrite").insertInto(fq)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    schema = spark.table(fq).schema
+    (
+        slice_df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .options(**_bloom_options(rel.design))
+        .partitionBy(*part_cols)
+        .parquet(_location(spark, fq))
+    )
+    spark.sql(f"ALTER TABLE {fq} RECOVER PARTITIONS")
     n_rows = spark.table(fq).filter(predicate).count()
     return {
         "relation": rel.identifier,
@@ -934,7 +914,6 @@ def compact_table(
     rel: Relation,
     db: str | None = None,
     target_file_bytes: int = 128 << 20,
-    precomputed_listing: "tuple | None" = None,
 ) -> tuple[int, int]:
     """Small-file compaction: rewrite a table's storage into ~target-size
     files without changing its content.  Returns (files_before, files_after).
@@ -965,26 +944,26 @@ def compact_table(
     co-located file per partition value, ``materialize_dataframe``); a
     fragmented single partition is ``refresh_partitions``' job.
     """
+    listing = _probe(ctx, rel, db, target_file_bytes)[1]
+    if listing is None:
+        return (0, 0)
+    return _compact(ctx, rel, db, *listing, target_file_bytes)
+
+
+def _compact(
+    ctx: LoadContext,
+    rel: Relation,
+    db: str | None,
+    location: str,
+    files: List[str],
+    total_bytes: int,
+    target_file_bytes: int,
+) -> tuple[int, int]:
+    """:func:`compact_table`'s rewrite, given the table's listing."""
     import math
     import os
 
     db = db or rel.table_name.schema
-    fq = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-    if _bucket_spec(rel.design) or rel.design.attributes.get("partition_by"):
-        return (0, 0)
-    if precomputed_listing is not None:
-        # maintenance already listed the table for its threshold probe —
-        # on the lakes this targets (millions of files) a second driver
-        # walk is the single most expensive step, so reuse it
-        location, files, total_bytes = precomputed_listing
-    else:
-        loc_rows = (
-            ctx.spark.sql(f"DESCRIBE FORMATTED {fq}")
-            .filter("col_name = 'Location'")
-            .collect()
-        )
-        location = loc_rows[0]["data_type"].replace("file:", "")
-        files, total_bytes = _parquet_listing(location)
     n_target = max(1, math.ceil(total_bytes / target_file_bytes))
     if len(files) <= n_target:
         return (len(files), len(files))  # already compact — no rewrite
@@ -1009,17 +988,8 @@ def compact_table(
             f"compaction checksum mismatch for {rel.identifier}: "
             f"{before} -> {after}; original left registered"
         )
-    _drop_relation(ctx, db, rel.table_name.table)
-    _register_external_table(ctx, db, rel.table_name.table, new_location)
-    n_after = len(
-        [
-            f
-            for _, _, names in os.walk(new_location)
-            for f in names
-            if f.endswith(".parquet")
-        ]
-    )
-    return (len(files), n_after)
+    _register(ctx, db, rel, new_location)
+    return (len(files), len(_parquet_listing(new_location)[0]))
 
 
 # --- lake maintenance policy (round 8) -------------------------------------
@@ -1038,30 +1008,31 @@ def fragmentation_report(
     rel: Relation,
     db: str | None = None,
     target_file_bytes: int = 128 << 20,
-    include_listing: bool = False,
 ) -> dict:
     """Metadata-only fragmentation probe: file count, bytes, compact target.
 
     Driver-side listing, no data read — cheap enough to run after every
     update.  Bucketed/partitioned tables report ``exempt`` (their layout
     carries semantics / is compact by construction, see
-    :func:`compact_table`).  ``include_listing`` additionally returns the
-    probe's (location, files, bytes) under ``_listing`` so a compaction
-    driven by this probe never lists the table twice.
+    :func:`compact_table`).
     """
+    return _probe(ctx, rel, db, target_file_bytes)[0]
+
+
+def _probe(
+    ctx: LoadContext, rel: Relation, db: str | None, target_file_bytes: int
+) -> tuple:
+    """(fragmentation report, (location, files, bytes) or None if exempt):
+    the one listing both the report and a compaction it drives use — on the
+    lakes this targets (millions of files) a second driver walk is the
+    single most expensive step."""
     import math
 
-    db = db or rel.table_name.schema
-    fq = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-    if _bucket_spec(rel.design) or rel.design.attributes.get("partition_by"):
+    if _declares_layout(rel.design):
         return {"files": 0, "bytes": 0, "target_files": 0,
-                "fragmented": False, "exempt": True}
-    loc_rows = (
-        ctx.spark.sql(f"DESCRIBE FORMATTED {fq}")
-        .filter("col_name = 'Location'")
-        .collect()
-    )
-    location = loc_rows[0]["data_type"].replace("file:", "")
+                "fragmented": False, "exempt": True}, None
+    db = db or rel.table_name.schema
+    location = _location(ctx.spark, f"{_quote(db)}.{_quote(rel.table_name.table)}")
     files, total = _parquet_listing(location)
     target = max(1, math.ceil(total / target_file_bytes))
     rep = {
@@ -1074,9 +1045,7 @@ def fragmentation_report(
         ),
         "exempt": False,
     }
-    if include_listing:
-        rep["_listing"] = (location, files, total)
-    return rep
+    return rep, (location, files, total)
 
 
 def maintain_table(
@@ -1096,19 +1065,14 @@ def maintain_table(
     re-register; a failed compaction leaves the table untouched and a
     ``fail`` event recorded.
     """
-    rep = fragmentation_report(
-        ctx, rel, db, target_file_bytes, include_listing=True
-    )
-    listing = rep.pop("_listing", None)
+    rep, listing = _probe(ctx, rel, db, target_file_bytes)
     rep["compacted"] = False
     if not rep["fragmented"]:
         return rep
     with Monitor(
         ctx.store, rel.identifier, STEP_MAINTAIN, etl_id=ctx.etl_id
     ) as mon:
-        before, after = compact_table(
-            ctx, rel, db, target_file_bytes, precomputed_listing=listing
-        )
+        before, after = _compact(ctx, rel, db, *listing, target_file_bytes)
         mon.rowcount = after
     rep["compacted"] = after < before
     rep["files_after"] = after
@@ -1257,12 +1221,8 @@ def restore_schemas(
         tn = rel.table_name
         if tn.schema not in restored_schemas or not selector.match(tn):
             continue
-        full = f"{_quote(tn.schema)}.{_quote(tn.table)}"
-        ctx.spark.sql(f"DROP VIEW IF EXISTS {full}")
-        ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
         try:
-            query = rewrite_redshift_sql(rel.sql())
-            ctx.spark.sql(f"CREATE VIEW {full} AS {query}")
+            _create_view(ctx, tn.schema, tn.table, rewrite_redshift_sql(rel.sql()))
             restored.append(rel.identifier)
         except Exception as exc:
             logger.warning("view %s not restored: %s", rel.identifier, exc)
@@ -1285,14 +1245,9 @@ def vacuum_lake(spark: SparkSession, data_root: str) -> List[str]:
         db = db_row["namespace"]
         for t in spark.catalog.listTables(db):
             try:
-                loc_rows = (
-                    spark.sql(f"DESCRIBE FORMATTED `{db}`.`{t.name}`")
-                    .filter("col_name = 'Location'")
-                    .collect()
-                )
-                if loc_rows:
-                    loc = loc_rows[0]["data_type"]
-                    referenced.add(loc.replace("file:", ""))
+                loc = _location(spark, f"{_quote(db)}.{_quote(t.name)}")
+                if loc:
+                    referenced.add(loc)
             except Exception:
                 continue
     removed = []
@@ -1329,13 +1284,7 @@ def table_versions(ctx: LoadContext, rel: Relation) -> List[dict]:
     current = None
     full = f"{_quote(tn.schema)}.{_quote(tn.table)}"
     if ctx.spark.catalog.tableExists(full):
-        loc_rows = (
-            ctx.spark.sql(f"DESCRIBE FORMATTED {full}")
-            .filter("col_name = 'Location'")
-            .collect()
-        )
-        if loc_rows:
-            current = loc_rows[0]["data_type"].replace("file:", "")
+        current = _location(ctx.spark, full)
     out: List[dict] = []
     if not os.path.isdir(ctx.data_root):
         return out
@@ -1393,8 +1342,6 @@ def rollback_table(ctx: LoadContext, rel: Relation, etl_id: str) -> dict:
     (it is referenced again) and the abandoned newer version becomes
     collectible — the two verbs compose into undo + cleanup.
     """
-    import os
-
     versions = table_versions(ctx, rel)
     target = next((v for v in versions if v["etl_id"] == etl_id), None)
     if target is None:
@@ -1412,11 +1359,7 @@ def rollback_table(ctx: LoadContext, rel: Relation, etl_id: str) -> dict:
     location = target["location"]
     df = ctx.spark.read.parquet(location)
     n_rows = df.count()  # readability + the post-rollback audit number
-    tn = rel.table_name
-    declares_columns = bool(
-        _bucket_spec(rel.design) or rel.design.attributes.get("partition_by")
-    )
-    if declares_columns:
+    if _declares_layout(rel.design):
         have_cols = set(df.columns)
         part_cols = list(rel.design.attributes.get("partition_by") or [])
         # partition columns live in directory names, not the files
@@ -1431,14 +1374,7 @@ def rollback_table(ctx: LoadContext, rel: Relation, etl_id: str) -> dict:
                 f"design columns {missing} absent from the version's files "
                 "(schema drift; the current design no longer matches)"
             )
-    _drop_relation(ctx, tn.schema, tn.table)
-    if _bucket_spec(rel.design):
-        _register_bucketed_table(ctx, tn.schema, rel, location)
-    elif rel.design.attributes.get("partition_by"):
-        _register_partitioned_table(ctx, tn.schema, rel, location)
-    else:
-        _register_external_table(ctx, tn.schema, tn.table, location)
-    _analyze_relation(ctx, tn.schema, tn.table, rel.design)
+    _register(ctx, rel.table_name.schema, rel, location)
     with Monitor(
         ctx.store, rel.identifier, STEP_MAINTAIN, etl_id=ctx.etl_id
     ) as mon:
@@ -1450,13 +1386,6 @@ def rollback_table(ctx: LoadContext, rel: Relation, etl_id: str) -> dict:
         "location": location,
         "rows": n_rows,
     }
-
-
-def _build_with_heap_check(ctx: LoadContext, rel: Relation, staging_ids) -> int:
-    """Percolator build unit: heap hygiene (single-flight — the pool's
-    threads share one driver heap) then the staged build."""
-    ensure_heap_headroom(ctx.spark, single_flight=True)
-    return build_one_relation(ctx, rel, True, staging_ids)
 
 
 def load_sources_as_extracted(
@@ -1483,6 +1412,11 @@ def load_sources_as_extracted(
     loaded: List[str] = []
     failed: List[Relation] = []
     last_progress = _time.time()
+
+    def build(rel: Relation) -> int:
+        ensure_heap_headroom(ctx.spark)
+        return build_one_relation(ctx, rel, True, staging_ids)
+
     with ThreadPoolExecutor(max_workers=ctx.max_concurrency) as pool:
         futures = {}
         while pending or futures:
@@ -1508,9 +1442,7 @@ def load_sources_as_extracted(
                         len(skipped),
                         skipped,
                     )
-                futures[ident] = pool.submit(
-                    _build_with_heap_check, ctx, rel, staging_ids
-                )
+                futures[ident] = pool.submit(build, rel)
             for ident, fut in list(futures.items()):
                 if fut.done():
                     del futures[ident]

@@ -55,17 +55,3 @@ def check_constraint(
 def check_all_constraints(df: DataFrame, design: TableDesign) -> None:
     for ctype, cols in design.constraint_items():
         check_constraint(df, ctype, cols, identifier=design.name)
-
-
-def constraint_violation_query_sql(
-    table: str, constraint_type: str, columns: Sequence[str]
-) -> str:
-    """The equivalent generated SQL (reference renders this for Redshift)."""
-    cols = ", ".join(columns)
-    where = ""
-    if constraint_type == "unique":
-        where = " WHERE " + " AND ".join(f"{c} IS NOT NULL" for c in columns)
-    return (
-        f"SELECT {cols}, COUNT(*) AS dup_count FROM {table}{where} "
-        f"GROUP BY {cols} HAVING COUNT(*) > 1 LIMIT {SAMPLE_LIMIT}"
-    )

@@ -217,23 +217,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_on_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_size: int = 3,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for given (id_a, id_b) pairs.
-
-    Computed set-algebraically on the distinct shingle sets
-    (|∩| via join-count; |∪| = |A| + |B| − |∩|) so it needs no array
-    materialization per pair.
-    """
-    toks = doc_shingles(df, id_col, text_col, shingle_size)
-    return jaccard_from_shingles(toks, pairs, id_col)
-
-
 def jaccard_from_shingles(
     toks: DataFrame,
     pairs: DataFrame,

@@ -161,18 +161,6 @@ def classify_by_token_profile(
     )
 
 
-def with_fingerprint(
-    df: DataFrame, text_col: str = "text", prefix_len: int = 0
-) -> DataFrame:
-    """Deterministic document fingerprint: md5 of (a prefix of) the text.
-
-    ``prefix_len > 0`` fingerprints only the first N chars — a cheap
-    rolling-hash-style prefix signature that catches near-identical heads.
-    """
-    base = F.col(text_col) if prefix_len <= 0 else F.substring(F.col(text_col), 1, prefix_len)
-    return df.withColumn("fingerprint", F.md5(base))
-
-
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -14,7 +14,7 @@ from __future__ import annotations
 import re
 from typing import List, Set
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def _collect_unresolved(plan_string: str) -> Set[str]:
@@ -46,19 +46,3 @@ def query_dependencies(spark: SparkSession, query: str) -> List[str]:
     jspark = spark._jsparkSession
     parsed = jspark.sessionState().sqlParser().parsePlan(query)
     return sorted(_collect_unresolved(parsed.toString()))
-
-
-def dataframe_dependencies(df: DataFrame) -> List[str]:
-    """Catalog tables an analyzed DataFrame reads (fully resolved)."""
-    plan = df._jdf.queryExecution().analyzed()
-    out: Set[str] = set()
-    it = plan.collectLeaves().iterator()
-    while it.hasNext():
-        leaf = it.next()
-        name = leaf.nodeName()
-        s = leaf.toString()
-        m = re.search(r"spark_catalog\.([\w.]+)", s)
-        if m:
-            parts = m.group(1).split(".")
-            out.add(".".join(parts[-2:]).lower())
-    return sorted(out)

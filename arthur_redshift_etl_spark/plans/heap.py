@@ -81,34 +81,16 @@ _STATE_ATTR = "_spark_graft_post_gc_state"
 _SINGLE_FLIGHT = threading.Lock()
 
 
-def ensure_heap_headroom(
-    spark, min_free_bytes: int | None = None, single_flight: bool = False
-) -> bool:
-    """GC the driver when potential free heap drops below the floor.
-
-    ``single_flight=True`` (concurrent callers) makes the whole check
-    try-lock guarded: if another thread is already probing/collecting,
-    return False immediately instead of queueing a second GC.  See
-    :func:`_ensure_heap_headroom` for the policy and measurements.
-    """
-    if single_flight:
-        if not _SINGLE_FLIGHT.acquire(blocking=False):
-            return False
-        try:
-            return ensure_heap_headroom(spark, min_free_bytes)
-        finally:
-            _SINGLE_FLIGHT.release()
-    return _ensure_heap_headroom(spark, min_free_bytes)
-
-
-def _ensure_heap_headroom(spark, min_free_bytes: int | None = None) -> bool:
+def ensure_heap_headroom(spark, min_free_bytes: int | None = None) -> bool:
     """GC the driver when potential free heap drops below the floor.
 
     Default floor: ``DEFAULT_MIN_FREE_FRACTION`` of max heap (or the
     ``SPARK_GRAFT_HEAP_MIN_FREE`` absolute override).  Returns True when
-    a GC was triggered.  Call between sequential relation builds /
-    queries sharing one session; cost is three py4j getters on the fast
-    path.
+    a GC was triggered.  Call between relation builds / queries sharing
+    one session; cost is three py4j getters on the fast path.
+
+    Single-flight: if another thread is already probing/collecting, return
+    False immediately instead of queueing a second GC.
 
     Hysteresis: if the LAST GC could not reach the floor (a big driver
     whose live set exceeds 1-fraction of max heap), collecting before
@@ -122,6 +104,8 @@ def _ensure_heap_headroom(spark, min_free_bytes: int | None = None) -> bool:
     session types) returns False instead of raising — a hygiene probe
     must never fail a buildable relation.
     """
+    if not _SINGLE_FLIGHT.acquire(blocking=False):
+        return False
     try:
         rep = heap_report(spark)
         if min_free_bytes is None:
@@ -151,3 +135,5 @@ def _ensure_heap_headroom(spark, min_free_bytes: int | None = None) -> bool:
         return True
     except Exception:  # noqa: BLE001 - advisory probe, never fail the build
         return False
+    finally:
+        _SINGLE_FLIGHT.release()

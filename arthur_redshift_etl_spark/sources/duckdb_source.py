@@ -130,12 +130,13 @@ def _key_ranges(lo, hi, n_parts: int):
     return ranges
 
 
-class DuckDBDataSource(DataSource):
-    """``format("duckdb")`` — see module docstring."""
+class _RangedSQLSource(DataSource):
+    """A SQL upstream read as contiguous key ranges — shared by
+    ``format("duckdb")`` and ``format("sqlite")``.  Options: path=,
+    table= (or query=), partition_column=, num_partitions=, batch_rows=.
+    Engines supply ``name()``, ``schema()`` and ``reader_class``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "duckdb"
+    reader_class: type
 
     def _relation_sql(self) -> str:
         table = self.options.get("table")
@@ -144,33 +145,17 @@ class DuckDBDataSource(DataSource):
             raise ValueError("exactly one of table= / query= is required")
         return f"({query}) AS q" if query else table
 
-    def schema(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("path= (duckdb database file) is required")
-        con = _connect(path)
-        try:
-            rows = con.execute(
-                f"DESCRIBE SELECT * FROM {self._relation_sql()}"
-            ).fetchall()
-        finally:
-            con.close()
-        cols = ", ".join(
-            f"{name} {_duck_type_to_ddl(dtype)}" for name, dtype, *_ in rows
-        )
-        return cols
-
-    def reader(self, schema: StructType) -> "DuckDBReader":
-        return DuckDBReader(dict(self.options), self._relation_sql(), schema)
-
-    def simpleStreamReader(self, schema: StructType) -> "DuckDBChangeFeedReader":
-        return DuckDBChangeFeedReader(dict(self.options), self._relation_sql(), schema)
-
-    def writer(self, schema: StructType, overwrite: bool) -> "DuckDBWriter":
-        return DuckDBWriter(dict(self.options), schema, overwrite)
+    def reader(self, schema: StructType) -> "_RangedSQLReader":
+        return self.reader_class(dict(self.options), self._relation_sql(), schema)
 
 
-class DuckDBReader(DataSourceReader):
+class _RangedSQLReader(DataSourceReader):
+    """Plans key ranges, pushes predicates as bind parameters and reads one
+    range per task.  Engines supply ``_connect(path)``, ``_batches(con,
+    sql, params)`` (Arrow record batches) and ``pushes_starts_with``."""
+
+    pushes_starts_with = False
+
     def __init__(self, options: dict, relation_sql: str, schema: StructType):
         self.path = options["path"]
         self.relation = relation_sql
@@ -214,7 +199,7 @@ class DuckDBReader(DataSourceReader):
                 slots = ", ".join("?" for _ in f.value)
                 self.where.append(f'"{col}" IN ({slots})')
                 self.params.extend(f.value)
-            elif known and isinstance(f, StringStartsWith):
+            elif known and isinstance(f, StringStartsWith) and self.pushes_starts_with:
                 # starts_with() is a case-sensitive byte-prefix test in
                 # DuckDB, matching Spark's semantics — and sidesteps LIKE
                 # wildcard escaping since the prefix binds as a parameter
@@ -227,7 +212,7 @@ class DuckDBReader(DataSourceReader):
     def partitions(self) -> Sequence[_Range]:
         if self.n_parts <= 1:
             return [_Range()]
-        con = _connect(self.path)
+        con = self._connect(self.path)
         try:
             lo, hi = con.execute(
                 f'SELECT MIN("{self.split_by}"), MAX("{self.split_by}") '
@@ -251,23 +236,92 @@ class DuckDBReader(DataSourceReader):
         sql = f"SELECT {cols} FROM {self.relation}"
         if where:
             sql += " WHERE " + " AND ".join(where)
-        con = _connect(self.path)
+        con = self._connect(self.path)
         try:
-            reader = con.execute(sql, params).fetch_record_batch(self.batch_rows)
-            while True:
-                try:
-                    yield reader.read_next_batch()
-                except StopIteration:
-                    break
+            yield from self._batches(con, sql, params)
         finally:
             con.close()
 
 
-def register_duckdb_source(spark) -> None:
-    """Register ``format("duckdb")`` on this session (idempotent)."""
+def _register_source(spark, source) -> None:
+    """Register a Python data source on this session (idempotent)."""
     # runtime conf (engine sessions set it at build; cover foreign sessions)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(DuckDBDataSource)
+    spark.dataSource.register(source)
+
+
+def _read_plan(spark, source, path: str, plan):
+    _register_source(spark, source)
+    r = spark.read.format(source.name()).option("path", path).option("query", plan.query)
+    key = plan.partition_column
+    if key and "(" not in key and plan.num_partitions > 1:
+        r = (
+            r.option("partition_column", key)
+            .option("num_partitions", str(plan.num_partitions))
+        )
+    return r.load()
+
+
+def _extract_design(spark, source, design, path, use_sampling, table_size_bytes):
+    from .jdbc import FALLBACK_TABLE_SIZE, plan_extract
+
+    plan = plan_extract(
+        design,
+        table_size_bytes=table_size_bytes or FALLBACK_TABLE_SIZE,
+        use_sampling=use_sampling,
+    )
+    return _read_plan(spark, source, path, plan)
+
+
+class DuckDBReader(_RangedSQLReader):
+    pushes_starts_with = True
+    _connect = staticmethod(_connect)
+
+    def _batches(self, con, sql: str, params: list):
+        # Arrow straight out of DuckDB: no row-at-a-time Python conversion
+        reader = con.execute(sql, params).fetch_record_batch(self.batch_rows)
+        while True:
+            try:
+                yield reader.read_next_batch()
+            except StopIteration:
+                break
+
+
+class DuckDBDataSource(_RangedSQLSource):
+    """``format("duckdb")`` — see module docstring."""
+
+    reader_class = DuckDBReader
+
+    @classmethod
+    def name(cls) -> str:
+        return "duckdb"
+
+    def schema(self) -> str:
+        path = self.options.get("path")
+        if not path:
+            raise ValueError("path= (duckdb database file) is required")
+        con = _connect(path)
+        try:
+            rows = con.execute(
+                f"DESCRIBE SELECT * FROM {self._relation_sql()}"
+            ).fetchall()
+        finally:
+            con.close()
+        cols = ", ".join(
+            f"{name} {_duck_type_to_ddl(dtype)}" for name, dtype, *_ in rows
+        )
+        return cols
+
+    def simpleStreamReader(self, schema: StructType) -> "DuckDBChangeFeedReader":
+        return DuckDBChangeFeedReader(dict(self.options), self._relation_sql(), schema)
+
+    def writer(self, schema: StructType, overwrite: bool) -> "DuckDBWriter":
+        return DuckDBWriter(dict(self.options), schema, overwrite)
+
+
+def register_duckdb_source(spark) -> None:
+    """Register ``format("duckdb")`` on this session (idempotent)."""
+    _register_source(spark, DuckDBDataSource)
 
 
 def read_plan(spark, path: str, plan):
@@ -280,15 +334,7 @@ def read_plan(spark, path: str, plan):
     upstream column, so those plans fall back to a single-range read —
     the same ``"(" not in key`` guard the sampling planner applies.
     """
-    register_duckdb_source(spark)
-    r = spark.read.format("duckdb").option("path", path).option("query", plan.query)
-    key = plan.partition_column
-    if key and "(" not in key and plan.num_partitions > 1:
-        r = (
-            r.option("partition_column", key)
-            .option("num_partitions", str(plan.num_partitions))
-        )
-    return r.load()
+    return _read_plan(spark, DuckDBDataSource, path, plan)
 
 
 def extract_design(spark, design, path: str, use_sampling: bool = False,
@@ -301,14 +347,9 @@ def extract_design(spark, design, path: str, use_sampling: bool = False,
     multiple-of-4 partition-count heuristic) executed against a DuckDB
     upstream — one designs file drives either transport.
     """
-    from .jdbc import FALLBACK_TABLE_SIZE, plan_extract
-
-    plan = plan_extract(
-        design,
-        table_size_bytes=table_size_bytes or FALLBACK_TABLE_SIZE,
-        use_sampling=use_sampling,
+    return _extract_design(
+        spark, DuckDBDataSource, design, path, use_sampling, table_size_bytes
     )
-    return read_plan(spark, path, plan)
 
 
 class DuckDBChangeFeedReader(SimpleDataSourceStreamReader):

@@ -2,7 +2,7 @@
 
 The loader ANALYZEs every published relation (table-level: size + row
 count) and `attributes.stats_columns` opt-in computes per-column
-ndv/min/max (`loader._analyze_relation`).  This script measures what each
+ndv/min/max (`loader._register`).  This script measures what each
 tier buys on the canonical reorder victim: a star query WRITTEN in the
 pessimal order —
 

@@ -87,6 +87,24 @@ def test_validate_rejects_bad_split_by():
         load_design(doc)
 
 
+def test_validate_rejects_bucket_by_on_external():
+    """EXTERNAL files were not written by the engine, so they were never
+    bucketed; a bucket spec on them would register a layout they lack."""
+    doc = {
+        "name": "ext.t",
+        "source_name": "EXTERNAL",
+        "columns": [{"name": "k", "type": "long"}],
+        "attributes": {
+            "location": "/lake/ext/t",
+            "bucket_by": {"columns": ["k"], "buckets": 4},
+        },
+    }
+    with pytest.raises(TableDesignSemanticError, match="bucket_by"):
+        load_design(doc)
+    del doc["attributes"]["bucket_by"]
+    assert load_design(doc).kind == "EXTERNAL"
+
+
 def test_validate_rejects_missing_keys_and_bad_types():
     with pytest.raises(TableDesignSyntaxError):
         load_design({"name": "a.b", "columns": [{"name": "x"}]})

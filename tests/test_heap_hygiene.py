@@ -4,6 +4,8 @@ in scripts/memory_stress.py — at 512 MB heap the heavy-query sequence
 fails on query 3 without it and passes 10/10 with it).
 """
 
+import pytest
+
 from arthur_redshift_etl_spark.plans.heap import (
     ensure_heap_headroom,
     heap_report,
@@ -26,17 +28,6 @@ def test_gc_fires_when_floor_unreachable(spark):
     # a floor above max heap is never satisfiable -> the GC branch runs
     rep = heap_report(spark)
     assert ensure_heap_headroom(spark, min_free_bytes=rep["max"] * 2) is True
-
-
-def test_loader_wires_hygiene_between_transforms():
-    # the integration point is the sequential transform loop — pin that the
-    # loader module calls the helper (the 512 MB e2e lives in the script)
-    import inspect
-
-    from arthur_redshift_etl_spark import loader
-
-    src = inspect.getsource(loader._build_all)
-    assert "ensure_heap_headroom" in src
 
 
 def _fake_spark(gc_counter):
@@ -129,9 +120,7 @@ def test_single_flight_skips_concurrent_checks(monkeypatch):
     results = {}
 
     def first():
-        results["first"] = heap.ensure_heap_headroom(
-            object(), min_free_bytes=1, single_flight=True
-        )
+        results["first"] = heap.ensure_heap_headroom(object(), min_free_bytes=1)
 
     t = threading.Thread(target=first)
     t.start()
@@ -142,34 +131,97 @@ def test_single_flight_skips_concurrent_checks(monkeypatch):
         threading.Event().wait(0.01)
     assert probes, "first caller never started probing"
     # a concurrent caller skips instantly: no second probe, returns False
-    assert (
-        heap.ensure_heap_headroom(object(), min_free_bytes=1, single_flight=True)
-        is False
-    )
+    assert heap.ensure_heap_headroom(object(), min_free_bytes=1) is False
     assert len(probes) == 1
     release_gate.set()
     t.join(timeout=5)
     assert results["first"] is False  # ample headroom -> no GC
     # lock released: a later single-flight call probes again
     release_gate.set()
-    assert (
-        heap.ensure_heap_headroom(object(), min_free_bytes=1, single_flight=True)
-        is False
-    )
+    assert heap.ensure_heap_headroom(object(), min_free_bytes=1) is False
     assert len(probes) == 2
 
 
-def test_loader_wires_hygiene_into_parallel_and_percolator_paths():
-    """VERDICT r07 item 5: the parallel source pool and the percolator share
-    the sequential loop's driver heap and get the same (single-flight)
-    guard."""
-    import inspect
-
+@pytest.fixture()
+def heap_checks(spark, monkeypatch):
+    """Count loader.ensure_heap_headroom calls (the 512 MB e2e lives in
+    scripts/memory_stress.py); drop the databases the load creates."""
     from arthur_redshift_etl_spark import loader
 
-    src = inspect.getsource(loader._build_all)
-    # the parallel source closure, not just the sequential transform loop
-    assert src.count("ensure_heap_headroom") >= 2
-    assert "single_flight=True" in src
-    perc = inspect.getsource(loader._build_with_heap_check)
-    assert "ensure_heap_headroom" in perc and "single_flight=True" in perc
+    calls = []
+    monkeypatch.setattr(
+        loader, "ensure_heap_headroom", lambda session: calls.append(1) or False
+    )
+    yield calls
+    for row in spark.sql("SHOW DATABASES").collect():
+        if row["namespace"] != "default":
+            spark.sql(f"DROP DATABASE IF EXISTS `{row['namespace']}` CASCADE")
+
+
+def _relations(spark, tmp_path, sf_dir):
+    from arthur_redshift_etl_spark.design import ColumnDefinition, TableDesign
+    from arthur_redshift_etl_spark.relations import Relation
+
+    sources = []
+    for table, key in (("nation", "n_nationkey"), ("region", "r_regionkey")):
+        d = str(tmp_path / "data" / table)
+        spark.read.parquet(f"{sf_dir}/{table}.parquet").select(key).write.mode(
+            "overwrite"
+        ).parquet(d)
+        design = TableDesign(
+            name=f"heapsrc.{table}",
+            source_name=f"up.public.{table}",
+            columns=[ColumnDefinition(key, "int")],
+        )
+        sources.append(Relation(design=design, data_location=d))
+    transform = Relation(
+        design=TableDesign(
+            name="heapdw.n_count",
+            source_name="CTAS",
+            columns=[ColumnDefinition("n", "long")],
+            depends_on=["heapsrc.nation"],
+        ),
+        query="SELECT COUNT(*) AS n FROM heapsrc.nation",
+    )
+    return sources, transform
+
+
+def _loads(store) -> int:
+    from arthur_redshift_etl_spark.monitor import EVENT_FINISH, STEP_LOAD
+
+    return len([e for e in store.query(step=STEP_LOAD) if e["event"] == EVENT_FINISH])
+
+
+def test_loader_checks_heap_before_every_build(
+    spark, tmp_path, sf_dir, heap_checks
+):
+    """The parallel source pool and the sequential transform loop share one
+    driver heap: one headroom check per built relation, on both paths."""
+    from arthur_redshift_etl_spark.loader import LoadContext, load_warehouse
+
+    sources, transform = _relations(spark, tmp_path, sf_dir)
+    ctx = LoadContext(spark=spark, data_root=str(tmp_path / "lake"))
+    load_warehouse(ctx, sources)
+    assert len(heap_checks) == _loads(ctx.store) == 2
+    ctx = LoadContext(spark=spark, data_root=str(tmp_path / "lake"))
+    load_warehouse(ctx, [*sources, transform])
+    assert len(heap_checks) - 2 == _loads(ctx.store) == 3
+
+
+def test_percolator_checks_heap_before_every_build(
+    spark, tmp_path, sf_dir, heap_checks
+):
+    """The event-driven source loader's pool gets the same per-build check."""
+    from arthur_redshift_etl_spark.loader import (
+        LoadContext,
+        load_sources_as_extracted,
+    )
+    from arthur_redshift_etl_spark.monitor import STEP_EXTRACT, Monitor
+
+    sources, _ = _relations(spark, tmp_path, sf_dir)
+    ctx = LoadContext(spark=spark, data_root=str(tmp_path / "lake"))
+    for rel in sources:
+        with Monitor(ctx.store, rel.identifier, STEP_EXTRACT):
+            pass
+    load_sources_as_extracted(ctx, sources, poll_interval=0.05)
+    assert len(heap_checks) == _loads(ctx.store) == 2

@@ -1182,3 +1182,184 @@ def test_rollback_refuses_schema_drift_for_declared_layouts(
     # partition column still prunes (registered PARTITIONED BY)
     info = rollback_table(ctx2, rel_with_cols(base_cols), ctx1.etl_id)
     assert info["rows"] == spark.table("drift.nation").count()
+
+
+def test_rollback_keeps_declared_layouts(spark, tmp_path, clean_dbs):
+    """Rollback re-registers a version with the design's layout: a bucketed
+    table keeps its bucket spec (co-located join, no shuffle) and a
+    partitioned one keeps its partitions (listed, and filters prune)."""
+    from pyspark.sql import functions as F
+
+    from arthur_redshift_etl_spark.bootstrap import bootstrap_source_design
+    from arthur_redshift_etl_spark.loader import rollback_table
+    from arthur_redshift_etl_spark.plans.lint import plan_text
+
+    lake = str(tmp_path / "lake")
+
+    def rels(limit):
+        out = {}
+        for name, table, attrs in (
+            ("rbl.lineitem", "lineitem",
+             {"bucket_by": {"columns": ["l_orderkey"], "buckets": 4}}),
+            ("rbl.orders", "orders",
+             {"bucket_by": {"columns": ["o_orderkey"], "buckets": 4}}),
+            ("rbl.orders_p", "orders", {"partition_by": ["order_month"]}),
+        ):
+            d = str(tmp_path / "data" / name)
+            df = spark.read.parquet(f"{SF_DIR}/{table}.parquet")
+            if name == "rbl.orders_p":
+                df = df.withColumn(
+                    "order_month", F.date_format("o_orderdate", "yyyy-MM")
+                )
+            if name != "rbl.orders":
+                df = df.orderBy(df.columns[0]).limit(limit)
+            df.write.mode("overwrite").parquet(d)
+            design = bootstrap_source_design(
+                spark.read.parquet(d), name, f"up.public.{table}"
+            )
+            design.attributes.update(attrs)
+            out[name] = Relation(design=design, data_location=d)
+        return out
+
+    ctx1 = LoadContext(spark=spark, data_root=lake, store=EventStore())
+    load_warehouse(ctx1, list(rels(1000).values()))
+    first = {t: spark.table(t).count() for t in ("rbl.lineitem", "rbl.orders_p")}
+    ctx2 = LoadContext(spark=spark, data_root=lake, store=EventStore())
+    second = rels(500)
+    load_warehouse(ctx2, list(second.values()))
+    for t in first:
+        assert spark.table(t).count() < first[t]
+        info = rollback_table(ctx2, second[t], ctx1.etl_id)
+        assert info["rows"] == spark.table(t).count() == first[t]
+
+    detail = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql("DESCRIBE FORMATTED rbl.lineitem").collect()
+    }
+    assert detail.get("Num Buckets") == "4"
+    assert "l_orderkey" in detail.get("Bucket Columns", "")
+    li, orders = spark.table("rbl.lineitem"), spark.table("rbl.orders")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joined = li.join(orders, li.l_orderkey == orders.o_orderkey)
+        assert "Exchange" not in plan_text(joined)
+        assert joined.count() == first["rbl.lineitem"]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    parts = [r[0] for r in spark.sql("SHOW PARTITIONS rbl.orders_p").collect()]
+    assert len(parts) > 1 and all(p.startswith("order_month=") for p in parts)
+    month = parts[0].split("=", 1)[1]
+    filtered = spark.table("rbl.orders_p").filter(F.col("order_month") == month)
+    assert "order_month" in plan_text(filtered).split("PartitionFilters")[1][:200]
+    assert 0 < filtered.count() < first["rbl.orders_p"]
+
+
+def test_refresh_partitions_leaves_session_conf_alone(
+    spark, tmp_path, clean_dbs, monkeypatch
+):
+    """The dynamic overwrite is a per-write option: refresh_partitions sets
+    nothing on the shared session conf, and with the session left at
+    ``static`` the partitions outside the slice keep their rows."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.conf import RuntimeConfig
+
+    from arthur_redshift_etl_spark.loader import refresh_partitions
+
+    d = str(tmp_path / "data" / "rps.nation")
+    spark.read.parquet(f"{SF_DIR}/nation.parquet").write.mode("overwrite").parquet(d)
+    src = Relation(
+        design=TableDesign(
+            name="rps.nation",
+            source_name="up.public.nation",
+            columns=[
+                ColumnDefinition("n_nationkey", "int", not_null=True),
+                ColumnDefinition("n_name", "string"),
+                ColumnDefinition("n_regionkey", "int"),
+            ],
+        ),
+        data_location=d,
+    )
+    design = TableDesign(
+        name="rpt.by_region",
+        source_name="CTAS",
+        columns=[
+            ColumnDefinition("n_nationkey", "int", not_null=True),
+            ColumnDefinition("n_name", "string"),
+            ColumnDefinition("n_regionkey", "int"),
+        ],
+        depends_on=["rps.nation"],
+        attributes={"partition_by": ["n_regionkey"]},
+    )
+    query = "SELECT n_nationkey, n_name, n_regionkey FROM rps.nation"
+    ctx = LoadContext(spark=spark, data_root=str(tmp_path / "lake"), store=EventStore())
+    load_warehouse(ctx, [src, Relation(design=design, query=query)])
+
+    def per_region():
+        return dict(
+            spark.table("rpt.by_region").groupBy("n_regionkey").count().collect()
+        )
+
+    before = per_region()
+    assert len(before) > 1
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(mode)
+    spark.conf.set(mode, "static")
+    sets = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig, "set",
+        lambda self, key, value: sets.append((key, value)) or real_set(self, key, value),
+    )
+    try:
+        # the recomputed slice drops one nation from region 1
+        audit = refresh_partitions(
+            ctx,
+            Relation(design=design, query=query + " WHERE n_nationkey <> 1"),
+            "n_regionkey = 1",
+        )
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(mode, old)
+    assert sets == []
+    assert audit["partitions"] == [("1",)]
+    after = per_region()
+    assert after[1] == before[1] - 1 == audit["n_rows"]
+    assert {k: v for k, v in after.items() if k != 1} == {
+        k: v for k, v in before.items() if k != 1
+    }
+    assert spark.table("rpt.by_region").filter(F.col("n_nationkey") == 1).count() == 0
+
+
+# names the benchmark's traced run (perfbench/workloads.py) patches on the
+# loader module; the loader must call each of them through that global
+BENCH_TRACED_LOADER_NAMES = (
+    "materialize_dataframe",
+    "check_all_constraints",
+    "publish",
+    "ensure_heap_headroom",
+    "call_with_retry",
+    "select_in_execution_order",
+    "order_by_dependencies",
+)
+
+
+def test_load_warehouse_calls_the_benchmark_traced_names(
+    spark, tmp_path, clean_dbs, monkeypatch
+):
+    from arthur_redshift_etl_spark import loader
+
+    calls = {name: 0 for name in BENCH_TRACED_LOADER_NAMES}
+    for name in BENCH_TRACED_LOADER_NAMES:
+        real = getattr(loader, name)
+
+        def counted(*args, _real=real, _name=name, **kwargs):
+            calls[_name] += 1
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(loader, name, counted)
+    rel = source_rel(spark, tmp_path, "bench.nation", "nation")
+    ctx = LoadContext(spark=spark, data_root=str(tmp_path / "lake"), store=EventStore())
+    assert load_warehouse(ctx, [rel]) == {"bench.nation": 1}
+    assert all(calls.values()), calls
