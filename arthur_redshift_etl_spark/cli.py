@@ -130,52 +130,50 @@ def cmd_validate(args) -> int:
     return 1 if errors else 0
 
 
-def cmd_load(args) -> int:
+def _build_or_cancel(spark, args, verb: str, build):
+    """Run ``build()`` in the job group ``args.job_group``: ``(result, None)``,
+    or ``(None, 130)`` after reporting that the group was cancelled."""
     from .jobcontrol import BuildGroup, is_cancellation
+
+    with BuildGroup(spark, args.repo, group=args.job_group) as bg:
+        try:
+            return build(), None
+        except Exception as exc:
+            if bg.cancelled or is_cancellation(exc, bg.group):
+                print(f"{verb} cancelled (job group {bg.group})", file=sys.stderr)
+                return None, 130
+            raise
+
+
+def cmd_load(args) -> int:
     from .loader import load_warehouse
 
     spark = _spark(args)
     ctx = _ctx(args, spark)
     required = TableSelector(args.required) if args.required else None
-    with BuildGroup(spark, args.repo, group=args.job_group) as bg:
-        try:
-            load_warehouse(
-                ctx,
-                _relations(args),
-                TableSelector(args.patterns),
-                required_selector=required,
-            )
-        except Exception as exc:
-            if bg.cancelled or is_cancellation(exc, bg.group):
-                print(f"load cancelled (job group {bg.group})", file=sys.stderr)
-                return 130
-            raise
+    _, cancelled = _build_or_cancel(spark, args, "load", lambda: load_warehouse(
+        ctx, _relations(args), TableSelector(args.patterns), required_selector=required
+    ))
+    if cancelled:
+        return cancelled
     print(f"load complete (etl_id={ctx.etl_id})")
     return 0
 
 
 def cmd_upgrade(args) -> int:
-    from .jobcontrol import BuildGroup, is_cancellation
     from .loader import upgrade_warehouse
 
     spark = _spark(args)
     ctx = _ctx(args, spark)
-    with BuildGroup(spark, args.repo, group=args.job_group) as bg:
-        try:
-            failed = upgrade_warehouse(
-                ctx,
-                _relations(args),
-                TableSelector(args.patterns),
-                include_dependents=not args.only_selected,
-                continue_from=args.continue_from,
-            )
-        except Exception as exc:
-            if bg.cancelled or is_cancellation(exc, bg.group):
-                print(
-                    f"upgrade cancelled (job group {bg.group})", file=sys.stderr
-                )
-                return 130
-            raise
+    failed, cancelled = _build_or_cancel(spark, args, "upgrade", lambda: upgrade_warehouse(
+        ctx,
+        _relations(args),
+        TableSelector(args.patterns),
+        include_dependents=not args.only_selected,
+        continue_from=args.continue_from,
+    ))
+    if cancelled:
+        return cancelled
     print(f"upgrade complete; {len(failed)} failure(s)")
     return 1 if failed else 0
 
@@ -210,22 +208,17 @@ def cmd_update(args) -> int:
             n = merge_update_table(ctx, rel, delta, keys)
             print(f"merged {rel.identifier}: {n} rows")
         return 0
-    from .jobcontrol import BuildGroup, is_cancellation
-
     if getattr(args, "with_maintain", False):
         # opt-in post-publish sweep (reference's run_vacuum analog); the
         # default path leaves maintenance to the scheduled `maintain` verb
         import dataclasses
 
         ctx = dataclasses.replace(ctx, auto_maintain=True)
-    with BuildGroup(spark, args.repo, group=args.job_group) as bg:
-        try:
-            update_warehouse(ctx, _relations(args), TableSelector(args.patterns))
-        except Exception as exc:
-            if bg.cancelled or is_cancellation(exc, bg.group):
-                print(f"update cancelled (job group {bg.group})", file=sys.stderr)
-                return 130
-            raise
+    _, cancelled = _build_or_cancel(spark, args, "update", lambda: update_warehouse(
+        ctx, _relations(args), TableSelector(args.patterns)
+    ))
+    if cancelled:
+        return cancelled
     print("update complete")
     return 0
 

@@ -2,26 +2,33 @@
 
 Reference context: user ``.sql`` files are opaque to the reference engine
 (read verbatim, ``relation.py:279-293``) and executed by Redshift.  To run
-the same files on Spark we pre-rewrite the handful of dialect deltas
+the same files on Spark we pre-rewrite the dialect deltas that Spark lacks
 (SURVEY §2.9/§7.4) as a conservative, token-aware string transform — NOT a
-full SQL parser.  Rewrites only touch code outside string literals.
+full SQL parser.  Rewrites only touch code outside string literals and
+comments.
 
 | Redshift                       | Spark                                   |
 |--------------------------------|-----------------------------------------|
 | GETDATE() / SYSDATE            | current_timestamp()                     |
-| NVL(a, b)                      | coalesce (NVL2 is native in Spark)      |
-| DECODE(e, s1, r1, ..., d)      | CASE WHEN ... (functional rewrite)      |
-| LISTAGG(x [,sep]) WITHIN GROUP | array_join(collect_list(x), sep)        |
-| MEDIAN(x)                      | percentile(x, 0.5)                      |
+| DECODE(e, s1, r1, ..., d)      | CASE WHEN e = s1 THEN r1 ... (native    |
+|                                | decode would match a NULL search value) |
 | APPROXIMATE COUNT(DISTINCT x)  | approx_count_distinct(x)                |
-| CONVERT_TIMEZONE('tz', t)      | from_utc_timestamp(t, 'tz')             |
-| DATEADD(unit, n, t)            | t + INTERVAL n unit (via dateadd)       |
-| DATEDIFF(unit, t1, t2)         | datediff(unit, t1, t2) — native ≥3.3    |
+| CONVERT_TIMEZONE('tz', t)      | from_utc_timestamp(t, 'tz') (native one |
+|                                | returns timestamp_ntz)                  |
 | STRTOL(x, 16)                  | conv(x, 16, 10)                         |
-| len(x)                         | length(x)                               |
+| CHARINDEX(sub, s)              | instr(s, sub) (arguments swap)          |
+| STRPOS(s, sub)                 | instr(s, sub)                           |
+| f_sha256(x)                    | sha2(x, 256)                            |
+| AS VARCHAR / ::VARCHAR         | AS STRING / ::string                    |
+| EXTRACT(EPOCH FROM t) / DATE_PART('epoch', t) | unix_timestamp(t)        |
+| TO_CHAR/TO_DATE/TO_TIMESTAMP(x, 'fmt') | date_format/to_date/to_timestamp |
+|                                | with Spark pattern letters              |
+| JSON_EXTRACT_PATH_TEXT(j, 'k') | get_json_object(j, '$.k')               |
 | QUALIFY <window-pred>          | inner SELECT + outer WHERE (* EXCEPT)   |
 
-``::type`` casts and ``DATE_PART`` parse natively in Spark ≥ 3.4.
+Spark 4.1 runs NVL, NVL2, LEN, MEDIAN, LISTAGG (WITHIN GROUP, DISTINCT and
+OVER), DATEADD, DATEDIFF, ``::type`` casts and DATE_PART natively, so they
+pass through untouched.
 """
 
 from __future__ import annotations
@@ -30,64 +37,46 @@ import re
 from typing import List, Tuple
 
 
+def _skip_literal(code: str, i: int) -> int:
+    """Index just past the '...' string (with '' escapes), -- comment or
+    block comment starting at i; i itself when none starts there."""
+    n = len(code)
+    if code.startswith("'", i):
+        j = i + 1
+        while j < n:
+            if code[j] == "'":
+                if j + 1 < n and code[j + 1] == "'":
+                    j += 2
+                    continue
+                return j + 1
+            j += 1
+        return n
+    if code.startswith("--", i):
+        j = code.find("\n", i)
+        return n if j == -1 else j
+    if code.startswith("/*", i):
+        j = code.find("*/", i + 2)
+        return n if j == -1 else j + 2
+    return i
+
+
 def _split_literals(sql: str) -> List[Tuple[str, bool]]:
     """Split SQL into (chunk, is_literal) segments; literals are '...' strings
     (with '' escapes) and -- / block comments."""
     out: List[Tuple[str, bool]] = []
-    i, n = 0, len(sql)
-    buf = []
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            if buf:
-                out.append(("".join(buf), False))
-                buf = []
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append((sql[i : j + 1], True))
-            i = j + 1
-        elif ch == "-" and i + 1 < n and sql[i + 1] == "-":
-            if buf:
-                out.append(("".join(buf), False))
-                buf = []
-            j = sql.find("\n", i)
-            j = n if j == -1 else j
-            out.append((sql[i:j], True))
-            i = j
-        elif ch == "/" and i + 1 < n and sql[i + 1] == "*":
-            if buf:
-                out.append(("".join(buf), False))
-                buf = []
-            j = sql.find("*/", i + 2)
-            j = n if j == -1 else j + 2
-            out.append((sql[i:j], True))
-            i = j
-        else:
-            buf.append(ch)
+    start = i = 0
+    while i < len(sql):
+        j = _skip_literal(sql, i)
+        if j == i:
             i += 1
-    if buf:
-        out.append(("".join(buf), False))
+            continue
+        if start < i:
+            out.append((sql[start:i], False))
+        out.append((sql[i:j], True))
+        start = i = j
+    if start < len(sql):
+        out.append((sql[start:], False))
     return out
-
-
-def _skip_literal(code: str, i: int) -> int:
-    """Given i at an opening quote, return index just past the literal."""
-    j = i + 1
-    n = len(code)
-    while j < n:
-        if code[j] == "'":
-            if j + 1 < n and code[j + 1] == "'":
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
 
 
 def _decode_to_case(args):
@@ -100,11 +89,6 @@ def _decode_to_case(args):
         f"WHEN {expr} = {rest[k]} THEN {rest[k + 1]}" for k in range(0, len(rest), 2)
     )
     return f"CASE {whens}" + (f" ELSE {default}" if default else "") + " END"
-
-
-def _rewrite_decode(code: str) -> str:
-    """Literal-aware DECODE → CASE (see ``_rewrite_call``)."""
-    return _rewrite_call(code, "DECODE", _decode_to_case)
 
 
 def _find_top_level(code: str, pattern: "re.Pattern", start: int = 0):
@@ -206,115 +190,99 @@ def _rewrite_qualify(code: str) -> str:
     ).strip()
 
 
+# token renames that never look at the arguments
 _SIMPLE_REWRITES = [
     (re.compile(r"\bGETDATE\s*\(\s*\)", re.I), "current_timestamp()"),
     (re.compile(r"\bSYSDATE\b", re.I), "current_timestamp()"),
-    (re.compile(r"\bNVL\s*\(", re.I), "coalesce("),
-    (re.compile(r"\bSTRTOL\s*\(\s*([^,()]+)\s*,\s*16\s*\)", re.I), r"conv(\1, 16, 10)"),
-    (re.compile(r"\bMEDIAN\s*\(\s*([^()]+?)\s*\)", re.I), r"percentile(\1, 0.5)"),
-    (
-        re.compile(r"\bAPPROXIMATE\s+COUNT\s*\(\s*DISTINCT\s+([^()]+?)\s*\)", re.I),
-        r"approx_count_distinct(\1)",
-    ),
-    (
-        re.compile(r"\bCONVERT_TIMEZONE\s*\(\s*('[^']*')\s*,\s*([^()]+?)\s*\)", re.I),
-        r"from_utc_timestamp(\2, \1)",
-    ),
-    # LISTAGG(x, 'sep') [WITHIN GROUP (ORDER BY ...)] — Spark: collect, sort,
-    # join.  WITHIN GROUP ordering maps to array_sort over the collected
-    # values (covers the dominant ORDER BY-the-aggregated-column case).
-    (
-        re.compile(
-            r"\bLISTAGG\s*\(\s*(DISTINCT\s+)?([^,()]+?)\s*(?:,\s*('[^']*'))?\s*\)"
-            r"(\s*WITHIN\s+GROUP\s*\(\s*ORDER\s+BY\s+[^()]*\))?",
-            re.I,
-        ),
-        lambda m: "array_join({sort_open}{distinct_open}collect_list({expr}){distinct_close}{sort_close}, {sep})".format(
-            sort_open="array_sort(" if m.group(4) else "",
-            distinct_open="array_distinct(" if m.group(1) else "",
-            expr=m.group(2),
-            distinct_close=")" if m.group(1) else "",
-            sort_close=")" if m.group(4) else "",
-            sep=m.group(3) or "''",
-        ),
-    ),
-    # DATEADD(unit, n, ts) → dateadd(unit, n, ts) is native in Spark ≥ 3.3 —
-    # normalize case only; DATEDIFF(unit, a, b) likewise native.
-    # reference's plpythonu UDF dw.f_sha256 (sql/001_ETL_create_f_sha256.sql)
-    (re.compile(r"\b(?:dw\.)?f_sha256\s*\(\s*([^()]+?)\s*\)", re.I), r"sha2(\1, 256)"),
-    # Redshift LEN → length
-    (re.compile(r"\bLEN\s*\(", re.I), "length("),
-    # CHARINDEX(substring, string) → instr(string, substring): Spark has no
-    # charindex and instr takes the haystack FIRST — the args must swap
-    (
-        re.compile(r"\bCHARINDEX\s*\(\s*([^,()]+?)\s*,\s*([^,()]+?)\s*\)", re.I),
-        r"instr(\2, \1)",
-    ),
     # STRPOS(string, substring) → instr (same argument order)
     (re.compile(r"\bSTRPOS\s*\(", re.I), "instr("),
     # bare VARCHAR casts (Redshift defaults the length; Spark requires one)
     (re.compile(r"\bAS\s+VARCHAR\s*(?![\s]*\()", re.I), "AS STRING"),
     (re.compile(r"::\s*VARCHAR\b(?![\s]*\()", re.I), "::string"),
-    # epoch extraction (no-literal form; the DATE_PART('epoch', x) form needs
-    # literal contents and runs post-restore — see _POST_RESTORE_REWRITES)
-    (
-        re.compile(r"\bEXTRACT\s*\(\s*EPOCH\s+FROM\s+([^()]+?)\s*\)", re.I),
-        r"unix_timestamp(\1)",
-    ),
 ]
 
 
 def _rewrite_call(code: str, name: str, transform) -> str:
-    """Rewrite every ``name(args...)`` call outside string literals.
+    """Rewrite every ``name(args...)`` call outside literals and comments.
 
-    Splits arguments at top-level commas (paren- and literal-aware) and
-    replaces the call with ``transform(args) -> str`` (return None to leave
-    the call untouched).
+    ``name`` is a regex.  The arguments are split at top-level commas
+    (paren- and literal-aware), calls nested in them are rewritten first,
+    and the call is replaced by ``transform(args) -> str``.  A transform
+    returns None to leave its call as written; the calls nested in its
+    arguments are still rewritten.  Scanning resumes after a replacement,
+    so a transform may emit its own name (TO_DATE → to_date).
     """
-    pattern = re.compile(rf"\b{name}\s*\(", re.I)
-    pos = 0
-    while True:
-        m = None
-        scan = pos
-        while scan < len(code):
-            if code[scan] == "'":
-                scan = _skip_literal(code, scan)
-                continue
-            m = pattern.match(code, scan)
-            if m:
-                break
-            scan += 1
+    pattern = re.compile(rf"\b(?:{name})\s*\(", re.I)
+    out, done, i = [], 0, 0
+    while i < len(code):
+        j = _skip_literal(code, i)
+        if j > i:
+            i = j
+            continue
+        m = pattern.match(code, i)
         if m is None:
-            return code
-        depth, i = 1, m.end()
-        args, start = [], m.end()
-        while i < len(code) and depth:
-            c = code[i]
-            if c == "'":
-                i = _skip_literal(code, i)
+            i += 1
+            continue
+        depth, j, start, args = 1, m.end(), m.end(), []
+        while j < len(code):
+            k = _skip_literal(code, j)
+            if k > j:
+                j = k
                 continue
+            c = code[j]
             if c == "(":
                 depth += 1
             elif c == ")":
                 depth -= 1
                 if depth == 0:
-                    args.append(code[start:i].strip())
                     break
             elif c == "," and depth == 1:
-                args.append(code[start:i].strip())
-                start = i + 1
-            i += 1
-        if depth:
-            return code
-        repl = transform(args)
+                args.append(code[start:j].strip())
+                start = j + 1
+            j += 1
+        if depth:  # unbalanced: leave the rest as written
+            break
+        args.append(code[start:j].strip())
+        repl = transform([_rewrite_call(a, name, transform) for a in args])
         if repl is None:
-            pos = i + 1
+            i = m.end()
             continue
-        code = code[: m.start()] + repl + code[i + 1 :]
-        # re-scan from the replacement: nested calls inside the arguments
-        # (e.g. DECODE within DECODE) still need rewriting.  Transforms must
-        # not emit the call name they match, or this would loop.
-        pos = m.start()
+        out.append(code[done : m.start()] + repl)
+        i = done = j + 1
+    out.append(code[done:])
+    return "".join(out)
+
+
+def _keyword_call(keyword: str, fn: str):
+    """Transform for a one-argument call ``name(<keyword> x)`` → ``fn(x)``."""
+
+    def transform(args):
+        m = re.fullmatch(rf"{keyword}\s+(.+)", args[0], re.I | re.S)
+        return f"{fn}({m.group(1)})" if len(args) == 1 and m else None
+
+    return transform
+
+
+# (name regex, transform) pairs run on the masked query: literal arguments
+# are placeholders, so these transforms test only for a literal's quotes
+_CALL_REWRITES = [
+    ("DECODE", _decode_to_case),
+    # CHARINDEX(substring, string) → instr(string, substring): Spark has no
+    # charindex and instr takes the haystack FIRST — the args must swap
+    ("CHARINDEX", lambda a: f"instr({a[1]}, {a[0]})" if len(a) == 2 else None),
+    ("STRTOL", lambda a: f"conv({a[0]}, 16, 10)" if a[1:] == ["16"] else None),
+    (r"APPROXIMATE\s+COUNT", _keyword_call("DISTINCT", "approx_count_distinct")),
+    (
+        "CONVERT_TIMEZONE",
+        lambda a: f"from_utc_timestamp({a[1]}, {a[0]})"
+        if len(a) == 2 and a[0].startswith("'")
+        else None,
+    ),
+    # reference's plpythonu UDF dw.f_sha256 (sql/001_ETL_create_f_sha256.sql)
+    (r"(?:dw\.)?f_sha256", lambda a: f"sha2({a[0]}, 256)" if len(a) == 1 else None),
+    ("EXTRACT", _keyword_call(r"EPOCH\s+FROM", "unix_timestamp")),
+]
+
 
 # Redshift TO_CHAR/TO_DATE datetime format tokens → Spark datetime pattern
 # letters.  Longest-first so e.g. HH24 wins over HH.  Unmapped alphabetic
@@ -351,15 +319,17 @@ def _translate_datetime_format(fmt: str) -> str:
     )
 
 
-# rules whose patterns include literal text — applied AFTER literal restore
-# (safe because the replacement introduces no quotes that could confuse later
-# rules; this list runs last)
-_POST_RESTORE_REWRITES = [
-    (
-        re.compile(r"\bDATE_PART\s*\(\s*'epoch'\s*,\s*([^()]+?)\s*\)", re.I),
-        r"unix_timestamp(\1)",
-    ),
-]
+def _datetime_call(fn: str):
+    """Transform for ``name(expr, 'fmt')`` with Redshift format tokens →
+    ``fn(expr, '<Spark pattern>')``.  Single-argument calls and non-literal
+    formats are left untouched."""
+
+    def transform(args):
+        if len(args) == 2 and args[1].startswith("'") and args[1].endswith("'"):
+            return f"{fn}({args[0]}, '{_translate_datetime_format(args[1][1:-1])}')"
+        return None
+
+    return transform
 
 
 def _json_path_to_get_json(args):
@@ -376,113 +346,40 @@ def _json_path_to_get_json(args):
     return f"get_json_object({args[0]}, '{path}')"
 
 
-_TO_CHAR_RE = re.compile(r"\b(TO_CHAR|TO_DATE|TO_TIMESTAMP)\s*\(", re.I)
-_TO_FN_MAP = {
-    "TO_CHAR": "date_format",
-    "TO_DATE": "to_date",
-    "TO_TIMESTAMP": "to_timestamp",
-}
-
-
-def _rewrite_to_char(code: str) -> str:
-    """TO_CHAR/TO_DATE/TO_TIMESTAMP(expr, 'fmt') with Redshift tokens →
-    date_format/to_date/to_timestamp(expr, '<translated fmt>').
-
-    Runs on the UNMASKED string (it must read the format literal), scanning
-    literal-safely.  Single-argument TO_DATE/TO_TIMESTAMP and non-literal
-    formats are left untouched.
-    """
-    pos = 0
-    while True:
-        m = None
-        scan = pos
-        while scan < len(code):
-            if code[scan] == "'":
-                scan = _skip_literal(code, scan)
-                continue
-            m = _TO_CHAR_RE.match(code, scan)
-            if m:
-                break
-            scan += 1
-        if m is None:
-            return code
-        depth, i = 1, m.end()
-        args, start = [], m.end()
-        while i < len(code) and depth:
-            c = code[i]
-            if c == "'":
-                i = _skip_literal(code, i)
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    args.append(code[start:i].strip())
-                    break
-            elif c == "," and depth == 1:
-                args.append(code[start:i].strip())
-                start = i + 1
-            i += 1
-        if depth:
-            return code  # unbalanced; bail
-        if len(args) == 2 and args[1].startswith("'") and args[1].endswith("'"):
-            fn = _TO_FN_MAP[m.group(1).upper()]
-            fmt = _translate_datetime_format(args[1][1:-1])
-            repl = f"{fn}({args[0]}, '{fmt}')"
-            code = code[: m.start()] + repl + code[i + 1 :]
-            pos = m.start() + len(repl)
-        else:
-            pos = i + 1
-
-# Leader-node-only functions the reference's explain lint flags
-# (explain.py:24-52) — they have no distributed equivalent in Redshift and
-# deserve review when migrating SQL; most ARE distributable in Spark.
-LEADER_ONLY_FUNCTIONS = (
-    "CURRENT_SCHEMA",
-    "CURRENT_SCHEMAS",
-    "AGE",
-    "NOW",
-    "ASCII",
-    "GET_BIT",
-    "GET_BYTE",
-    "OCTET_LENGTH",
-    "SET_BIT",
-    "SET_BYTE",
-    "TO_ASCII",
-)
-
-
-def lint_leader_only_functions(sql: str):
-    """Names of reference leader-only functions appearing in the SQL."""
-    found = []
-    for chunk, is_literal in _split_literals(sql):
-        if is_literal:
-            continue
-        for fn in LEADER_ONLY_FUNCTIONS:
-            if re.search(rf"\b{fn}\s*\(", chunk, re.I):
-                found.append(fn)
-    return sorted(set(found))
+# call rewrites that read literal contents — run after the literals are
+# restored (their replacements introduce no quotes a later rule could trip on)
+_LITERAL_CALL_REWRITES = [
+    ("TO_CHAR", _datetime_call("date_format")),
+    ("TO_DATE", _datetime_call("to_date")),
+    ("TO_TIMESTAMP", _datetime_call("to_timestamp")),
+    ("JSON_EXTRACT_PATH_TEXT", _json_path_to_get_json),
+    (
+        "DATE_PART",
+        lambda a: f"unix_timestamp({a[1]})"
+        if len(a) == 2 and a[0].lower() == "'epoch'"
+        else None,
+    ),
+]
 
 
 def rewrite_redshift_sql(sql: str) -> str:
     """Rewrite Redshift-dialect SQL to Spark SQL, preserving string literals.
 
-    >>> rewrite_redshift_sql("SELECT GETDATE(), NVL(a, 0) FROM t")
-    'SELECT current_timestamp(), coalesce(a, 0) FROM t'
+    >>> rewrite_redshift_sql("SELECT GETDATE(), CHARINDEX('@', email) FROM t")
+    "SELECT current_timestamp(), instr(email, '@') FROM t"
     >>> rewrite_redshift_sql("SELECT DECODE(x, 1, 'one', 'other') FROM t")
     "SELECT CASE WHEN x = 1 THEN 'one' ELSE 'other' END FROM t"
     >>> rewrite_redshift_sql("SELECT 'GETDATE()' AS lit")
     "SELECT 'GETDATE()' AS lit"
-    >>> rewrite_redshift_sql("SELECT MEDIAN(price) FROM t")
-    'SELECT percentile(price, 0.5) FROM t'
+    >>> rewrite_redshift_sql("SELECT TO_CHAR(TO_DATE(s, 'YYYYMMDD'), 'YYYY-MM') FROM t")
+    "SELECT date_format(to_date(s, 'yyyyMMdd'), 'yyyy-MM') FROM t"
     >>> rewrite_redshift_sql(
     ...     "SELECT a FROM t QUALIFY ROW_NUMBER() OVER (ORDER BY a) = 1")
     'SELECT * EXCEPT (__qualify) FROM (SELECT a, (ROW_NUMBER() OVER (ORDER BY a) = 1) AS __qualify FROM t) WHERE __qualify'
     """
     # Mask literals/comments with unique placeholders so rewrites never touch
     # or get confused by their contents; string literals keep their quotes so
-    # literal-argument patterns (e.g. LISTAGG's separator) still match.
+    # transforms can still tell a literal argument from an expression.
     parts = _split_literals(sql)
     masked, restore = [], {}
     for idx, (chunk, is_literal) in enumerate(parts):
@@ -499,20 +396,11 @@ def rewrite_redshift_sql(sql: str) -> str:
     code = "".join(masked)
     for pat, repl in _SIMPLE_REWRITES:
         code = pat.sub(repl, code)
-    code = _rewrite_decode(code)
-    # CHARINDEX(substr, str) → instr(str, substr): argument order swaps
-    code = _rewrite_call(
-        code,
-        "CHARINDEX",
-        lambda a: f"instr({a[1]}, {a[0]})" if len(a) == 2 else None,
-    )
+    for name, transform in _CALL_REWRITES:
+        code = _rewrite_call(code, name, transform)
     code = _rewrite_qualify(code)
     for key, orig in restore.items():
         code = code.replace(key, orig)
-    # TO_CHAR/TO_DATE format translation, JSON path building, and rules
-    # keyed on literal arguments must see literal contents → after restore.
-    code = _rewrite_to_char(code)
-    code = _rewrite_call(code, "JSON_EXTRACT_PATH_TEXT", _json_path_to_get_json)
-    for pat, repl in _POST_RESTORE_REWRITES:
-        code = pat.sub(repl, code)
+    for name, transform in _LITERAL_CALL_REWRITES:
+        code = _rewrite_call(code, name, transform)
     return code

@@ -93,15 +93,18 @@ def rewrite_query_for_staging(query: str, identifiers: Iterable[str]) -> str:
     """Point fully-qualified dependency names at their staging schemas.
 
     Reference: load.py:221-245 + names.py:158-171 — word-boundary regex
-    substitution over the query text.
+    substitution over the query text.  Either part of a name may be
+    backquoted; the quoting is kept.
     """
     out = query
     for ident in sorted(identifiers, key=len, reverse=True):
         schema, table = ident.split(".", 1)
         pattern = re.compile(
-            rf"(?<![\w.`]){re.escape(schema)}\.{re.escape(table)}(?![\w])", re.IGNORECASE
+            rf"(?<![\w.`])(`?){re.escape(schema)}\1\.(`?){re.escape(table)}\2(?![\w])",
+            re.IGNORECASE,
         )
-        out = pattern.sub(f"{as_staging(schema)}.{table}", out)
+        staged = as_staging(schema)
+        out = pattern.sub(lambda m: f"{m[1]}{staged}{m[1]}.{m[2]}{table}{m[2]}", out)
     return out
 
 

@@ -71,14 +71,18 @@ def _unwrap_cached_physical(imr_jnode):
     ADVICE r13: initialPlan() relies on that bytecode accident surviving
     Spark upgrades, so fall back to inputPlan()/executedPlan() rather than
     letting the whole pin go opaque on a signature change (the armed test
-    in test_lint_gate still pins the initialPlan path on this version)."""
+    in test_lint_gate still pins the initialPlan path on this version).
+    When all three fail the last error is raised: the AQE leaf has no
+    children, so returning it would hide the pin's scans, and the callers
+    count a raising pin as opaque."""
     phys = imr_jnode.cachedPlan()
     if phys.nodeName() == "AdaptiveSparkPlan":
         for meth in ("initialPlan", "inputPlan", "executedPlan"):
             try:
                 return getattr(phys, meth)()
-            except Exception:  # noqa: BLE001 - try the next accessor
-                continue
+            except Exception as exc:  # noqa: BLE001 - try the next accessor
+                last = exc
+        raise last
     return phys
 
 

@@ -1704,7 +1704,7 @@ def text_bpe_token_count(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n
     FROM lineitem GROUP BY l_returnflag
     """,
-    description="exact median (Redshift MEDIAN → percentile shim path)",
+    description="exact median (percentile(x, 0.5), what Redshift MEDIAN computes)",
 )
 def median_quantity_by_flag(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
@@ -1927,7 +1927,7 @@ def _run_dialect(spark, sf_dir, tables, redshift_sql):
     FROM nation JOIN region ON n_regionkey = r_regionkey
     GROUP BY r_regionkey
     """,
-    description="Redshift LISTAGG WITHIN GROUP → array_sort+array_join shim",
+    description="Redshift LISTAGG WITHIN GROUP, run natively by Spark (the shim leaves it as written)",
 )
 def dialect_listagg_nations(spark, sf_dir):
     return _run_dialect(
@@ -1957,7 +1957,7 @@ def dialect_listagg_nations(spark, sf_dir):
     WHERE TIMESTAMP '2000-01-01 00:00:00' > TIMESTAMP '1999-01-01 00:00:00'
     GROUP BY 1
     """,
-    description="Redshift DECODE/NVL/GETDATE through the shim",
+    description="Redshift DECODE/GETDATE through the shim, NVL native",
 )
 def dialect_decode_status(spark, sf_dir):
     return _run_dialect(
@@ -4750,8 +4750,8 @@ def dialect_qualify_largest_order(spark, sf_dir):
     GROUP BY 1
     """,
     description=(
-        "Redshift TO_CHAR datetime-format tokens (YYYY-MM -> yyyy-MM), "
-        "CHARINDEX (arg-swapped to instr), and LEN through the shim"
+        "Redshift TO_CHAR datetime-format tokens (YYYY-MM -> yyyy-MM) and "
+        "CHARINDEX (arg-swapped to instr) through the shim, LEN native"
     ),
 )
 def dialect_to_char_monthly(spark, sf_dir):
@@ -5359,8 +5359,8 @@ def nation_revenue_share(spark, sf_dir):
     description=(
         "Redshift string-function surface through the dialect shim: "
         "CHARINDEX (argument order SWAPS into Spark's instr — the shim "
-        "rewrite this entry exists to pin), STRPOS, LEN, SPLIT_PART — "
-        "each executed via rewrite_redshift_sql and value-matched "
+        "rewrite this entry exists to pin), STRPOS, LEN, SPLIT_PART (the "
+        "last two native) — each executed via rewrite_redshift_sql and value-matched "
         "against DuckDB's native equivalents"
     ),
 )
@@ -5405,7 +5405,8 @@ def dialect_string_functions(spark, sf_dir):
     description=(
         "dialect kitchen sink: one Redshift-flavored statement combining "
         "TO_CHAR, DECODE, NVL, LISTAGG DISTINCT WITHIN GROUP, and QUALIFY "
-        "— every shim rewrite firing in a single query, oracle-matched"
+        "— shim rewrites and native Redshift functions in a single query, "
+        "oracle-matched"
     ),
 )
 def dialect_kitchen_sink(spark, sf_dir):

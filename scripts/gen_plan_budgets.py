@@ -48,7 +48,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # optional argv subset: re-plan only the named entries and merge into
     # the existing file (for a round that touched a handful of plans; the
-    # full sweep remains the default and the CI -m full path re-verifies)
+    # full sweep remains the default and the CI -m full path re-verifies).
+    # The merge drops entries no longer in REGISTRY and names the ones it
+    # keeps without re-planning.
     subset = sys.argv[1:]
     budgets = {}
     if subset and os.path.exists(OUT):
@@ -57,6 +59,11 @@ def main() -> None:
         unknown = sorted(set(subset) - set(REGISTRY))
         if unknown:
             raise SystemExit(f"unknown entries: {unknown}")
+        pruned = sorted(set(budgets) - set(REGISTRY))
+        budgets = {k: v for k, v in budgets.items() if k in REGISTRY}
+        kept = sorted(set(budgets) - set(subset))
+        print(f"pruned {len(pruned)} entries not in REGISTRY: {pruned}")
+        print(f"kept {len(kept)} entries without re-planning: {kept}")
     for name in subset or sorted(REGISTRY):
         budgets[name] = count_exchanges(plan_text(REGISTRY[name].fn(spark, SF)))
         spark.catalog.clearCache()

@@ -115,6 +115,24 @@ def test_per_query_steal_rides_the_line_filtered(bench):
     assert len(json.dumps(compact)) <= bench.LINE_BUDGET
 
 
+def test_host_outlives_per_query_steal_on_an_overflowing_line(bench):
+    """The run-level host block adjudicates every query; the per-query steal
+    map only details it, so an overflowing line sheds the map first."""
+    result = _full_result(30)
+    compact = bench.compact_stdout_result(result)
+    worst8 = {k: 0.62 for k in list(result["queries_steal_cores"])[:8]}
+    # the line overflows with both blocks on it
+    assert len(json.dumps(dict(compact, queries_steal_cores=worst8))) > (
+        bench.LINE_BUDGET
+    )
+    line = json.dumps(compact)
+    assert len(line) <= bench.LINE_BUDGET
+    parsed = json.loads(line)
+    assert parsed["host"]["steal_cores"] == 0.14
+    assert "queries_steal_cores" not in parsed
+    assert "queries_omitted" not in parsed
+
+
 def test_r08_regression_shape_now_parses(bench):
     """The exact field set that overflowed in round 8 compacts to <= budget."""
     result = _full_result(23)

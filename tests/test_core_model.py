@@ -136,15 +136,25 @@ def test_column_from_attribute_fallback():
     assert c.sql_type == "varchar(10000)" and c.type == "string"
 
 
-def test_compat_dateadd_untouched_listagg_rewritten():
+def test_compat_dateadd_untouched_listagg_rewritten(spark):
     from arthur_redshift_etl_spark.functions import rewrite_redshift_sql
 
-    sql = "SELECT LISTAGG(name, ', ') WITHIN GROUP (ORDER BY name) FROM t GROUP BY g"
-    out = rewrite_redshift_sql(sql)
-    assert "array_join(array_sort(collect_list(name)), ', ')" in out
-    # no WITHIN GROUP → no sort
-    out2 = rewrite_redshift_sql("SELECT LISTAGG(name, ',') FROM t GROUP BY g")
-    assert "array_join(collect_list(name), ',')" in out2
+    spark.createDataFrame(
+        [(1, "b"), (1, "a"), (1, "c"), (2, "z")], "g INT, name STRING"
+    ).createOrReplaceTempView("compat_names")
+    sql = (
+        "SELECT g, LISTAGG(name, ', ') WITHIN GROUP (ORDER BY name) AS v "
+        "FROM compat_names GROUP BY g ORDER BY g"
+    )
+    out = spark.sql(rewrite_redshift_sql(sql)).collect()
+    assert [tuple(r) for r in out] == [(1, "a, b, c"), (2, "z")]
+    # no WITHIN GROUP → no order, the same members
+    out2 = spark.sql(rewrite_redshift_sql(
+        "SELECT g, LISTAGG(name, ',') AS v FROM compat_names GROUP BY g ORDER BY g"
+    )).collect()
+    assert [(r.g, sorted(r.v.split(","))) for r in out2] == [
+        (1, ["a", "b", "c"]), (2, ["z"])
+    ]
     assert rewrite_redshift_sql("SELECT dateadd(day, 1, d) FROM t") == (
         "SELECT dateadd(day, 1, d) FROM t"
     )

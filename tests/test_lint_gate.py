@@ -208,6 +208,29 @@ def test_fact_scan_basename_anchoring():
     assert _fact_scans_from_path("/data/events_archive.parquet") == []
 
 
+def test_unreadable_aqe_pin_raises_instead_of_hiding_its_scans():
+    """An AQE-wrapped cache whose three plan accessors all fail must raise:
+    the AdaptiveSparkPlan leaf has no children, so walking it would count
+    no scans, and only a raise makes the audit count the pin as opaque."""
+    from arthur_redshift_etl_spark.plans.lint import _unwrap_cached_physical
+
+    class AqeLeaf:
+        def nodeName(self):
+            return "AdaptiveSparkPlan"
+
+        def _gone(self):
+            raise RuntimeError("accessor gone")
+
+        initialPlan = inputPlan = executedPlan = _gone
+
+    class CachedRelation:
+        def cachedPlan(self):
+            return AqeLeaf()
+
+    with pytest.raises(RuntimeError, match="accessor gone"):
+        _unwrap_cached_physical(CachedRelation())
+
+
 def test_big_broadcast_threshold_fires(spark):
     """The size check is live: any hinted subtree trips it when the budget
     is set below its Catalyst estimate."""

@@ -1363,3 +1363,32 @@ def test_load_warehouse_calls_the_benchmark_traced_names(
     ctx = LoadContext(spark=spark, data_root=str(tmp_path / "lake"), store=EventStore())
     assert load_warehouse(ctx, [rel]) == {"bench.nation": 1}
     assert all(calls.values()), calls
+
+
+def test_load_warehouse_stages_backquoted_dependencies(spark, tmp_path, clean_dbs):
+    """A transformation that names its source with backquotes must read the
+    staging copy: on a fresh catalog there is no production table yet."""
+    src = source_rel(spark, tmp_path, "bq.nation", "nation")
+
+    def copy(name, source):
+        return Relation(
+            design=TableDesign(
+                name=name,
+                source_name="CTAS",
+                columns=[ColumnDefinition("n_nationkey", "int"), ColumnDefinition("n_name")],
+                depends_on=["bq.nation"],
+            ),
+            query=f"SELECT n_nationkey, n_name FROM {source}",
+        )
+
+    rels = [src, copy("bq.quoted", "`bq`.`nation`"), copy("bq.half", "bq.`nation`")]
+    ctx = LoadContext(spark=spark, data_root=str(tmp_path / "lake"), store=EventStore())
+    assert load_warehouse(ctx, rels) == {"bq.nation": 1, "bq.quoted": 1, "bq.half": 1}
+    want = sorted(
+        tuple(r)
+        for r in spark.read.parquet(f"{SF_DIR}/nation.parquet")
+        .select("n_nationkey", "n_name")
+        .collect()
+    )
+    for table in ("bq.quoted", "bq.half"):
+        assert sorted(tuple(r) for r in spark.table(table).collect()) == want
