@@ -60,20 +60,23 @@ def _skip_literal(code: str, i: int) -> int:
     return i
 
 
+_LITERAL_START_RE = re.compile(r"'|--|/\*")
+
+
 def _split_literals(sql: str) -> List[Tuple[str, bool]]:
     """Split SQL into (chunk, is_literal) segments; literals are '...' strings
     (with '' escapes) and -- / block comments."""
     out: List[Tuple[str, bool]] = []
-    start = i = 0
-    while i < len(sql):
-        j = _skip_literal(sql, i)
-        if j == i:
-            i += 1
-            continue
-        if start < i:
-            out.append((sql[start:i], False))
-        out.append((sql[i:j], True))
-        start = i = j
+    start = 0
+    while True:
+        m = _LITERAL_START_RE.search(sql, start)
+        if m is None:
+            break
+        j = _skip_literal(sql, m.start())
+        if start < m.start():
+            out.append((sql[start : m.start()], False))
+        out.append((sql[m.start() : j], True))
+        start = j
     if start < len(sql):
         out.append((sql[start:], False))
     return out
@@ -202,55 +205,65 @@ _SIMPLE_REWRITES = [
 ]
 
 
-def _rewrite_call(code: str, name: str, transform) -> str:
-    """Rewrite every ``name(args...)`` call outside literals and comments.
+def _call_rules(rules):
+    """Compile (name regex, transform) pairs for ``_rewrite_calls``: one scan
+    pattern that finds literal and comment starts, parentheses, commas and
+    every rule's ``name(``, plus the transforms in rule order."""
+    names = "|".join(f"(?P<r{k}>{name})" for k, (name, _) in enumerate(rules))
+    pattern = re.compile(rf"'|--|/\*|[(),]|\b(?:{names})\s*\(", re.I)
+    return pattern, [transform for _, transform in rules]
 
-    ``name`` is a regex.  The arguments are split at top-level commas
-    (paren- and literal-aware), calls nested in them are rewritten first,
-    and the call is replaced by ``transform(args) -> str``.  A transform
-    returns None to leave its call as written; the calls nested in its
-    arguments are still rewritten.  Scanning resumes after a replacement,
-    so a transform may emit its own name (TO_DATE → to_date).
+
+def _rewrite_calls(code: str, rules) -> str:
+    """Rewrite every call named by ``rules`` (from ``_call_rules``) outside
+    literals and comments, in one scan of ``code``.
+
+    A call's arguments are split at top-level commas, calls nested in them
+    are rewritten first, and the call is replaced by ``transform(args) ->
+    str``.  A transform returns None to leave its call as written; the calls
+    nested in its arguments are still rewritten.  Scanning resumes after
+    the call, so a transform may emit its own name (TO_DATE → to_date).
     """
-    pattern = re.compile(rf"\b(?:{name})\s*\(", re.I)
-    out, done, i = [], 0, 0
-    while i < len(code):
-        j = _skip_literal(code, i)
-        if j > i:
-            i = j
-            continue
-        m = pattern.match(code, i)
-        if m is None:
-            i += 1
-            continue
-        depth, j, start, args = 1, m.end(), m.end(), []
-        while j < len(code):
-            k = _skip_literal(code, j)
-            if k > j:
-                j = k
-                continue
-            c = code[j]
-            if c == "(":
+    pattern, transforms = rules
+
+    def scan(i: int, in_call: bool):
+        # -> (pieces, end): the rewritten text of code[i:] split at the
+        # top-level commas of the enclosing call and the index just past its
+        # ")"; (None, end) when that ")" never comes.  At the top level
+        # (in_call False) pieces is one string covering the rest of code.
+        pieces, out, done, depth = [], [], i, 0
+        while True:
+            m = pattern.search(code, i)
+            if m is None:
+                break
+            tok, i = m.group(0), m.end()
+            if tok in ("'", "--", "/*"):
+                i = _skip_literal(code, m.start())
+            elif tok == "(":
                 depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
+            elif tok == ")" or tok == ",":
+                if in_call and depth == 0:
+                    out.append(code[done : m.start()])
+                    pieces.append("".join(out))
+                    out, done = [], i
+                    if tok == ")":
+                        return pieces, i
+                elif tok == ")":
+                    depth -= 1
+            else:
+                args, end = scan(i, True)
+                if args is None:  # unbalanced: leave the rest as written
                     break
-            elif c == "," and depth == 1:
-                args.append(code[start:j].strip())
-                start = j + 1
-            j += 1
-        if depth:  # unbalanced: leave the rest as written
-            break
-        args.append(code[start:j].strip())
-        repl = transform([_rewrite_call(a, name, transform) for a in args])
-        if repl is None:
-            i = m.end()
-            continue
-        out.append(code[done : m.start()] + repl)
-        i = done = j + 1
-    out.append(code[done:])
-    return "".join(out)
+                repl = transforms[int(m.lastgroup[1:])]([a.strip() for a in args])
+                out.append(code[done : m.start()])
+                out.append(tok + ",".join(args) + ")" if repl is None else repl)
+                done = i = end
+        if in_call:
+            return None, len(code)
+        out.append(code[done:])
+        return ["".join(out)], len(code)
+
+    return scan(0, False)[0][0]
 
 
 def _keyword_call(keyword: str, fn: str):
@@ -265,7 +278,7 @@ def _keyword_call(keyword: str, fn: str):
 
 # (name regex, transform) pairs run on the masked query: literal arguments
 # are placeholders, so these transforms test only for a literal's quotes
-_CALL_REWRITES = [
+_CALL_REWRITES = _call_rules([
     ("DECODE", _decode_to_case),
     # CHARINDEX(substring, string) → instr(string, substring): Spark has no
     # charindex and instr takes the haystack FIRST — the args must swap
@@ -281,7 +294,7 @@ _CALL_REWRITES = [
     # reference's plpythonu UDF dw.f_sha256 (sql/001_ETL_create_f_sha256.sql)
     (r"(?:dw\.)?f_sha256", lambda a: f"sha2({a[0]}, 256)" if len(a) == 1 else None),
     ("EXTRACT", _keyword_call(r"EPOCH\s+FROM", "unix_timestamp")),
-]
+])
 
 
 # Redshift TO_CHAR/TO_DATE datetime format tokens → Spark datetime pattern
@@ -348,7 +361,7 @@ def _json_path_to_get_json(args):
 
 # call rewrites that read literal contents — run after the literals are
 # restored (their replacements introduce no quotes a later rule could trip on)
-_LITERAL_CALL_REWRITES = [
+_LITERAL_CALL_REWRITES = _call_rules([
     ("TO_CHAR", _datetime_call("date_format")),
     ("TO_DATE", _datetime_call("to_date")),
     ("TO_TIMESTAMP", _datetime_call("to_timestamp")),
@@ -359,7 +372,7 @@ _LITERAL_CALL_REWRITES = [
         if len(a) == 2 and a[0].lower() == "'epoch'"
         else None,
     ),
-]
+])
 
 
 def rewrite_redshift_sql(sql: str) -> str:
@@ -396,11 +409,8 @@ def rewrite_redshift_sql(sql: str) -> str:
     code = "".join(masked)
     for pat, repl in _SIMPLE_REWRITES:
         code = pat.sub(repl, code)
-    for name, transform in _CALL_REWRITES:
-        code = _rewrite_call(code, name, transform)
+    code = _rewrite_calls(code, _CALL_REWRITES)
     code = _rewrite_qualify(code)
     for key, orig in restore.items():
         code = code.replace(key, orig)
-    for name, transform in _LITERAL_CALL_REWRITES:
-        code = _rewrite_call(code, name, transform)
-    return code
+    return _rewrite_calls(code, _LITERAL_CALL_REWRITES)

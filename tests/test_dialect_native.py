@@ -5,8 +5,9 @@ tests below build CTAS relations that use them over a small source table
 and read the published tables: the pinned cases keep the values and types
 of the former regex rewrites, the others are cases those rewrites got wrong
 (LISTAGG ordered by another column, DESC, the window form, an all-NULL
-group) plus a TO_DATE nested in TO_CHAR.  The last test checks that the
-shim's call rewrites see past comments and nested parentheses.
+group) plus a TO_DATE nested in TO_CHAR.  The last tests check that the
+shim's call rewrites see past comments and nested parentheses, and that a
+nested call is scanned once however deep it sits.
 """
 
 from decimal import Decimal
@@ -14,7 +15,7 @@ from decimal import Decimal
 import pytest
 
 from arthur_redshift_etl_spark.design import ColumnDefinition, TableDesign
-from arthur_redshift_etl_spark.functions import rewrite_redshift_sql
+from arthur_redshift_etl_spark.functions import compat, rewrite_redshift_sql
 from arthur_redshift_etl_spark.loader import LoadContext, load_warehouse
 from arthur_redshift_etl_spark.monitor import EventStore
 from arthur_redshift_etl_spark.relations import Relation
@@ -188,4 +189,33 @@ def test_call_rewrites_see_past_comments_and_nested_parens():
     ) == (
         "SELECT from_utc_timestamp(CAST(s AS TIMESTAMP), 'America/New_York'), "
         "conv(lower(h), 16, 10) FROM t"
+    )
+
+
+def test_nested_calls_left_as_written_are_transformed_once_each():
+    seen = []
+
+    def keep(args):
+        seen.append(args)
+        return None
+
+    depth = 14
+    sql = "SELECT " + "F(1, " * depth + "x" + ")" * depth + " FROM t"
+    assert compat._rewrite_calls(sql, compat._call_rules([("F", keep)])) == sql
+    assert len(seen) == depth
+    # the same holds through the shim's own rules: DATE_PART('year', ...)
+    # and one-argument TO_DATE are left to Spark, the innermost call is not
+    inner = "DATE_PART('year', TO_DATE(" * depth + "TO_DATE(s, 'YYYYMMDD')"
+    assert rewrite_redshift_sql(inner + "))" * depth) == (
+        "DATE_PART('year', TO_DATE(" * depth + "to_date(s, 'yyyyMMdd')" + "))" * depth
+    )
+
+
+def test_one_scan_rewrites_different_rules_nested_in_each_other():
+    assert rewrite_redshift_sql(
+        "SELECT DECODE(CHARINDEX('@', f_sha256(e)), 0, NULL, 1), "
+        "STRTOL(DECODE(k, 1, 'ff', '0'), 16) FROM t"
+    ) == (
+        "SELECT CASE WHEN instr(sha2(e, 256), '@') = 0 THEN NULL ELSE 1 END, "
+        "conv(CASE WHEN k = 1 THEN 'ff' ELSE '0' END, 16, 10) FROM t"
     )
